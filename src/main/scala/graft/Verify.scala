@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,21 +9,7 @@ object Verify {
     // iteration only — the driver always passes two args = full run)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // colTypeOpt probes analyze lambda-var columns standalone and
-    // CATCH the failure; Spark 4 still posts it to the execution
-    // listener bus, which logs a scary-but-benign ERROR — silence
-    // that one logger (the exception is handled, nothing is lost)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.util.ExecutionListenerBus",
-      org.apache.logging.log4j.Level.OFF)
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     var complexTyped = List.empty[String]
     SparkEntry.queries

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -80,12 +79,6 @@ object DotProduct {
     case exprs => throw new IllegalArgumentException(
       s"dot_product requires exactly 2 arguments, got ${exprs.length}")
   }
-
-  val registration: (FunctionIdentifier, ExpressionInfo,
-      FunctionRegistry.FunctionBuilder) = (
-    FunctionIdentifier("dot_product"),
-    new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-    builder)
 
   /** register `dot_product` for SQL use on an existing session */
   def register(spark: SparkSession): Unit =

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -67,25 +65,8 @@ object StripPrefix {
   def apply(c: Column): Column =
     GraftColumnBridge.column(StripPrefix(GraftColumnBridge.expression(c)))
 
-  val registration: (FunctionIdentifier, ExpressionInfo,
-      FunctionRegistry.FunctionBuilder) = (
-    FunctionIdentifier("strip_prefix"),
-    new ExpressionInfo(classOf[StripPrefix].getName, "strip_prefix"),
-    (exprs: Seq[Expression]) => StripPrefix(exprs.head))
-
   /** register `strip_prefix` for SQL use on an existing session */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "strip_prefix", exprs => StripPrefix(exprs.head), "built-in")
-}
-
-/** SparkSessionExtensions wiring:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(StripPrefix.registration)
-    e.injectFunction(DotProduct.registration)
-  }
 }

@@ -12,11 +12,14 @@ import org.json4s.jackson.JsonMethods
   */
 object EgdmCodec {
 
-  def parseLine(line: String): Entity = {
-    val root = JsonMethods.parse(line)
+  def parseLine(line: String): Entity = parse(JsonMethods.parse(line))
+
+  /** one already-parsed EGDM entity object */
+  def parse(root: JValue): Entity = {
     val id = root \ "id" match {
       case JString(s) => s
-      case _ => throw new IllegalArgumentException(s"entity missing id: $line")
+      case _ => throw new IllegalArgumentException(
+        s"entity missing id: ${JsonMethods.compact(JsonMethods.render(root))}")
     }
     val deleted = root \ "deleted" match {
       case JBool(b) => b

@@ -726,8 +726,6 @@ object GraphMerge {
     // loop checkpoints against). Cache is lazy, so single-effect
     // statements (the common case — the guard below skips them) and
     // the final frame feeding commit pay nothing extra.
-    val profW0 = sys.env.contains("PROF_WRITE")
-    val tLoop0 = System.nanoTime()
     effects.zipWithIndex.foreach { case (effect, idx) =>
       val n0 = nodes
       val e0 = edges
@@ -1004,17 +1002,9 @@ object GraphMerge {
       }
     }
 
-    val profW = profW0
-    if (profW) println(
-      f"  WRITE loop ${(System.nanoTime() - tLoop0) / 1e9}%.2f s")
-    def pw[T](label: String)(f: => T): T =
-      if (!profW) f else {
-        val t0 = System.nanoTime(); val r = f
-        println(f"  WRITE $label ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      }
-    pw("phaseA") { phaseA.run() } // ONE job: every batch-derived probe
-    pw("phaseB") { deferredB.result().foreach(_())
-      phaseB.run() } // ONE job: the bucket-pruned pre-state store probes
+    phaseA.run() // ONE job: every batch-derived probe
+    deferredB.result().foreach(_())
+    phaseB.run() // ONE job: the bucket-pruned pre-state store probes
     restoreCodegen() // commit/overlay below are data-sized — codegen on
 
     val anyChange = nodesCreated + edgesCreated + propertiesSet +
@@ -1041,14 +1031,12 @@ object GraphMerge {
           import scala.concurrent.{Await, Future}
           import scala.concurrent.duration.Duration
           import scala.concurrent.ExecutionContext.Implicits.global
-          pw("overlays") {
-            val nF = if (nodes eq initialNodes) None else Some(Future(
-              store.overlayNodes(nodes, s.dirtyNodes ++ dirtyNodes)))
-            val eF = if (edges eq initialEdges) None else Some(Future(
-              store.overlayEdges(edges, s.dirtyEdges ++ dirtyEdges)))
-            nF.foreach(f => s.workNodes = Some(Await.result(f, Duration.Inf)))
-            eF.foreach(f => s.workEdges = Some(Await.result(f, Duration.Inf)))
-          }
+          val nF = if (nodes eq initialNodes) None else Some(Future(
+            store.overlayNodes(nodes, s.dirtyNodes ++ dirtyNodes)))
+          val eF = if (edges eq initialEdges) None else Some(Future(
+            store.overlayEdges(edges, s.dirtyEdges ++ dirtyEdges)))
+          nF.foreach(f => s.workNodes = Some(Await.result(f, Duration.Inf)))
+          eF.foreach(f => s.workEdges = Some(Await.result(f, Duration.Inf)))
           s.dirtyNodes ++= dirtyNodes
           s.dirtyEdges ++= dirtyEdges
           s.secondaryLabels ++= newSecondaryLabels

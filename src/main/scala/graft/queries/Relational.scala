@@ -37,13 +37,8 @@ object Relational {
   private val docsRelayout = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), String]
 
-  /** probe/test hook: bypass the re-layout (measure the single-split
-    * baseline) */
-  @volatile private[graft] var docsRelayoutEnabled = true
-
   private def docsTable(s: SparkSession, dir: String): DataFrame = {
     val src = s"$dir/documents.parquet"
-    if (!docsRelayoutEnabled) return s.read.parquet(src)
     val path = docsRelayout.getOrElseUpdate((s, src), {
       val df = s.read.parquet(src)
       if (df.inputFiles.length >= 8 || df.rdd.getNumPartitions >= 8) src

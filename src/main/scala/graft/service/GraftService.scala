@@ -265,9 +265,7 @@ class GraftService(spark: SparkSession, initialConfig: LayerConfig,
     val trimmed = body.trim
     if (trimmed.startsWith("[")) {
       JsonMethods.parse(trimmed) match {
-        case JArray(items) =>
-          items.map(i => EgdmCodec.parseLine(JsonMethods.compact(
-            JsonMethods.render(i))))
+        case JArray(items) => items.map(EgdmCodec.parse)
         case _ => throw new IllegalArgumentException("expected entity array")
       }
     } else {

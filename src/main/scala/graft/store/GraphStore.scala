@@ -890,23 +890,6 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
     * @return the committed version, or the current one if `syncId`
     *   replays the last commit.
     */
-  /** env-gated commit-phase profiler (GRAFT_PROF_COMMIT=1): one
-    * CPHASE line per commit phase -- the write-latency budget's
-    * measurement hook (queries.Prof reads these) */
-  private def cphase[T](label: String)(f: => T): T =
-    if (!GraphStore.profCommit) f
-    else {
-      GraphStore.ensureProfListener(spark)
-      val j0 = GraphStore.profJobs.get()
-      val t0 = System.nanoTime(); val r = f
-      // drain the async listener bus so job counts attribute to the
-      // phase that scheduled them (profiler-only path)
-      Thread.sleep(120)
-      println(f"CPHASE $label ${(System.nanoTime() - t0) / 1e9}%.3f s " +
-        s"${GraphStore.profJobs.get() - j0} jobs")
-      r
-    }
-
   def commit(
       newNodes: DataFrame,
       newEdges: DataFrame,
@@ -948,8 +931,8 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
           s"store at $root has a pre-bucketing manifest; run compact() first")
       // declared constraints veto the batch BEFORE any write job runs
       // (violating commits write nothing; the pointer never flips)
-      cphase("constraints")(enforceConstraints(
-        newNodes, newEdges, dirtyNodes, dirtyEdges, prev, bc))
+      enforceConstraints(
+        newNodes, newEdges, dirtyNodes, dirtyEdges, prev, bc)
       // the table writes touch disjoint directories and share no
       // lineage — run them as concurrent Spark jobs (the scheduler
       // interleaves stages)
@@ -976,7 +959,7 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
       // to the sidecar BEFORE the pointer flip so a failed commit
       // retries with the same centroids), then maintain each index
       // table with the same bounded delta shape as the reverse index
-      val sdefs = cphase("index-train")(indexDefs0.map { d0 =>
+      val sdefs = indexDefs0.map { d0 =>
         val d =
           if (d0.kind == "vector" && d0.centroids.isEmpty) {
             val vecs = SearchIndexes.vectors(newNodes, d0)
@@ -1025,7 +1008,7 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
             } else d0
           } else d0
         d
-      })
+      }
       // per-commit channel from the graph-tier delta futures back to
       // the entry-point maintenance below: (tookFullRebuild,
       // removedGids) — entries must refresh on BOTH (a full rebuild
@@ -1076,14 +1059,11 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
       // await ALL before propagating a failure: an orphaned sibling
       // job still writing into seg=<next> would race a retried
       // commit's cleanup of that directory
-      val (nodesManT, edgesManT, redgesManT, idxManTs) =
-        cphase("write-await") {
-          (scala.util.Try(Await.result(nodesManF, Duration.Inf)),
-            scala.util.Try(Await.result(edgesManF, Duration.Inf)),
-            scala.util.Try(Await.result(redgesManF, Duration.Inf)),
-            idxManFs.map { case (t, f) =>
-              t -> scala.util.Try(Await.result(f, Duration.Inf)) })
-        }
+      val nodesManT = scala.util.Try(Await.result(nodesManF, Duration.Inf))
+      val edgesManT = scala.util.Try(Await.result(edgesManF, Duration.Inf))
+      val redgesManT = scala.util.Try(Await.result(redgesManF, Duration.Inf))
+      val idxManTs = idxManFs.map { case (t, f) =>
+        t -> scala.util.Try(Await.result(f, Duration.Inf)) }
       val nodesMan = nodesManT.get
       val edgesMan = edgesManT.get
       val redgesMan = redgesManT.get
@@ -1097,7 +1077,7 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
       // deleted gid reads nothing — enough deletions and queryNodes
       // returns zero rows on a populated index), or entries are
       // missing for a populated table (fresh build).
-      cphase("graph-entries")(sdefs.foreach { d =>
+      sdefs.foreach { d =>
         if (d.kind == "vector" && d.graphDeg > 0 && d.centroids.nonEmpty) {
           val (fullRebuild, removedGids) =
             graphDeltaInfo.getOrElse(d.name, (false, Set.empty[String]))
@@ -1120,7 +1100,7 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
               d.copy(graphEntries = entries))
           }
         }
-      })
+      }
       // ---- count store (Neo4j's O(1) count answers): per-partition
       // row counts for nodes/edges ride the commit. Untouched
       // partitions (identical file list) carry their previous count;
@@ -1145,12 +1125,12 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
           counted.map { case (k, f) =>
             k -> Await.result(f, Duration.Inf) }
       }
-      val (nodeCounts, edgeCounts) = cphase("footer-counts")(
-        (tableCounts("nodes", nodesMan), tableCounts("edges", edgesMan)))
-      val (ltOut, ltIn) = cphase("lt-counts")(ltCounts(
+      val nodeCounts = tableCounts("nodes", nodesMan)
+      val edgeCounts = tableCounts("edges", edgesMan)
+      val (ltOut, ltIn) = ltCounts(
         newNodes, newEdges, dirtyNodes,
         dirtyEdges, prev, prevCounts, nodesMan, edgesMan, bc,
-        nodeCounts.values.sum + edgeCounts.values.sum))
+        nodeCounts.values.sum + edgeCounts.values.sum)
       writeCounts(next, Map(
         "nodes" -> nodeCounts, "edges" -> edgeCounts,
         "ltOut" -> ltOut, "ltIn" -> ltIn))
@@ -3020,25 +3000,6 @@ object GraphStore {
     case "BOOLEAN" => "b"
     case _ => "a" // LIST<...>
   }
-
-  private[graft] val profCommit: Boolean =
-    sys.env.contains("GRAFT_PROF_COMMIT")
-
-  private[graft] val profJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-  @volatile private var profListenerOn = false
-  private[graft] def ensureProfListener(spark: SparkSession): Unit =
-    synchronized {
-      if (!profListenerOn) {
-        profListenerOn = true
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onJobStart(
-                j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-              profJobs.incrementAndGet(); ()
-            }
-          })
-      }
-    }
 
   val LtSep = "\u0001"
 

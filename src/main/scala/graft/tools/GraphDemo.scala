@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.model.{EgdmCodec, Entity}
 import graft.ops.{GraphDataset, GraphRead}
 import graft.store.GraphStore
@@ -14,14 +13,7 @@ import graft.store.GraphStore
 object GraphDemo {
   def main(args: Array[String]): Unit = {
     val Array(ndjson, storeDir) = args
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("graft-demo")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
 
     val entities = EgdmCodec.read(spark, ndjson)
     println(s"INGESTED=${entities.count()}")

@@ -2,8 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.model.LayerConfig
 import graft.service.GraftService
 
@@ -34,16 +33,7 @@ object ServeMain {
     val port = args.lift(2).map(_.toInt)
       .orElse(Some(config.layer.port.toInt)).get
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName(config.layer.serviceName)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // passing the config path enables the reference's refresh loop
     // (layer.go:72): dataset definitions hot-reload on the interval

@@ -2,9 +2,9 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.GraftSession
 import graft.model.{EgdmCodec, Entity}
 import graft.store.GraphStore
 import graft.streaming.EventStreams
@@ -16,13 +16,7 @@ import graft.streaming.EventStreams
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("graft-stream-demo")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
 
     val (inDir, storeDir) =
       if (args.length >= 2) (args(0), args(1))

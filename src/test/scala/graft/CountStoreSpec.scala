@@ -25,23 +25,6 @@ class CountStoreSpec extends AnyFunSuite {
   private def one(st: GraphStore, q: String): Long =
     CypherEngine.query(st, q).collect().head.getLong(0)
 
-  private def countJobs(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    // drain the async listener bus: events posted by the fixture's
-    // commit would otherwise deliver to the listener registered below
-    Thread.sleep(1500)
-    spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(500) }
-    finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
-  }
-
   private def seed(st: GraphStore): Unit = {
     val sess = CypherEngine.session(st)
     (1 to 7).foreach(i =>
@@ -61,7 +44,7 @@ class CountStoreSpec extends AnyFunSuite {
     val st = newStore("zero")
     seed(st)
     var got = Seq.empty[Long]
-    val jobs = countJobs {
+    val jobs = SparkCounts.jobs(spark) {
       got = Seq(
         one(st, "MATCH (n:Person) RETURN count(n) AS n"),
         one(st, "MATCH (n:City) RETURN count(*) AS n"),
@@ -161,7 +144,7 @@ class CountStoreSpec extends AnyFunSuite {
     val st = newStore("lt")
     seed(st)
     var got = Seq.empty[Long]
-    val jobs = countJobs {
+    val jobs = SparkCounts.jobs(spark) {
       got = Seq(
         one(st, "MATCH (:Person)-[r:LIVES_IN]->() RETURN count(r) AS n"),
         one(st, "MATCH ()-[r:LIVES_IN]->(:City) RETURN count(r) AS n"),

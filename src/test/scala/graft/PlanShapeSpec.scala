@@ -132,8 +132,9 @@ class PlanShapeSpec extends AnyFunSuite {
         "MATCH (n:TxNode) RETURN count(n) AS c")
         .collect()(0).getLong(0)
       assert(n == 57L)
-      // listener callbacks are async; give the bus a moment to drain
-      Thread.sleep(1500)
+      // listener callbacks are async: wait until the bus has
+      // delivered every execution the statement fired
+      SparkCounts.drain(spark)
       assert(offenders.isEmpty, s"unpartitioned windows: $offenders")
     } finally spark.listenerManager.unregister(listener)
   }

@@ -107,25 +107,16 @@ class SearchIndexSpec extends AnyFunSuite {
     // sidecar, assignments from the manifest table — no training jobs
     val st2 = new GraphStore(root, spark, 4)
     assert(st2.indexDef("vidx").exists(_.centroids.nonEmpty))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val jobs = SparkCounts.jobs(spark) {
       val got = CypherEngine.query(st2,
         s"""CALL db.index.vector.queryNodes('vidx', 3, ${vecLit(q)})
            |YIELD node, score RETURN node.gid AS gid""".stripMargin)
         .collect().map(_.getString(0)).toSeq
       assert(got == expect)
-      Thread.sleep(1000)
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
     // training alone is TrainIters+1 collects over the corpus; a pure
     // probe query stays a handful of scan/collect jobs
-    assert(jobs.get() <= 8, s"too many jobs for a probe query: ${jobs.get()}")
+    assert(jobs <= 8, s"too many jobs for a probe query: $jobs")
   }
 
   test("fulltext index: DDL, BM25 parity, term-bucket pruning, delta") {
@@ -789,23 +780,14 @@ class SearchIndexSpec extends AnyFunSuite {
 
     // the whole walk (planning + execution) is a bounded handful of
     // jobs — an early stop, not a region read
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val jobs = SparkCounts.jobs(spark) {
       val again = CypherEngine.query(st,
         """MATCH (p:Person) RETURN p.gid AS gid
           |ORDER BY p.age LIMIT 5""".stripMargin)
       assert(gids(again) == (1 to 5).map(i => f"p:$i%03d"))
-      Thread.sleep(1000)
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get() <= 6,
-      s"too many jobs for an index-ordered top-k: ${jobs.get()}")
+    }
+    assert(jobs <= 6,
+      s"too many jobs for an index-ordered top-k: $jobs")
 
     // correctness fallbacks: shapes the walk must NOT serve still
     // answer right through the ordinary plan
@@ -905,24 +887,14 @@ class SearchIndexSpec extends AnyFunSuite {
     assertRouted(tail, "exhausted bounded span")
 
     // early stop: the whole routed query is a bounded handful of jobs
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    Thread.sleep(800)
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val jobs = SparkCounts.jobs(spark) {
       val again = CypherEngine.query(st,
         """MATCH (p:Person {tenant: 't1'})
           |RETURN p.gid AS gid ORDER BY p.age LIMIT 5""".stripMargin)
       assert(gids(again) == Seq(1, 4, 7, 10, 13).map(i => f"p:$i%03d"))
-      Thread.sleep(1000)
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get() <= 6,
-      s"too many jobs for a composite ordered top-k: ${jobs.get()}")
+    }
+    assert(jobs <= 6,
+      s"too many jobs for a composite ordered top-k: $jobs")
 
     // correctness at the span tail: the missing-age node sorts LAST
     // in its tenant (ASC nulls-last) through the fallback plan
@@ -1678,20 +1650,10 @@ class SearchIndexSpec extends AnyFunSuite {
     CypherEngine.query(st,
       """CREATE CONSTRAINT anum FOR (a:Acct)
         |REQUIRE a.num IS NOT NULL""".stripMargin).collect()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    val before = try {
+    val before = SparkCounts.jobs(spark) {
       CypherEngine.query(st,
         "CREATE (:Acct {gid: 'a:60', tenant: 't9', num: 60})").collect()
-      Thread.sleep(1000)
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
     // the write path itself runs ~30 jobs (probes + node/edge/index/
     // redges writes + px delta); the fused check must stay O(1) on
     // top — one batch pass + one conflict join — NOT 3 per constraint

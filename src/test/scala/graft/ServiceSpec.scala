@@ -4,11 +4,12 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.LayerConfig
 import graft.service.GraftService
+import graft.store.GraphStore
 
 /** Drives the REST shell over real HTTP: write (incremental + full
   * sync headers), paginated reads, change feed, Cypher query endpoint,
@@ -364,6 +365,38 @@ class ServiceSpec extends AnyFunSuite {
       val chUnder = get2("/datasets/people/changes?limit=3&since=0")
       assert(chUnder.contains("\"truncated\":"), chUnder)
     } finally small.stop()
+  }
+
+  test("a JSON-array body commits the same rows as the same entities in NDJSON") {
+    val ents = Seq(
+      """{"id":"urn:ar1","props":{"urn:x#name":"one","urn:x#tags":[1,true,"t"]},"refs":{"urn:x#knows":["urn:ar2","urn:ar3"]}}""",
+      """{"id":"urn:ar2","deleted":false,"props":{"urn:x#score":2.5},"refs":{"urn:x#knows":"urn:ar1"}}""",
+      """{"id":"urn:ar3","props":{"urn:x#n":7}}""")
+    // each body goes to a fresh service on its own store; the rows
+    // are compared without `recorded`, the commit's wall-clock stamp
+    def committed(body: String): (Set[Row], Set[Row]) = {
+      val cfg = LayerConfig.fromJson(configJson)
+        .fold(m => fail(s"config: $m"), identity)
+      val dir = Files.createTempDirectory("graft-svc-body").toString
+      val svc = new GraftService(spark, cfg, dir)
+      svc.start()
+      try {
+        val r = http.send(HttpRequest.newBuilder(
+          URI.create(s"http://localhost:${svc.port}/datasets/people/entities"))
+          .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 200, r.body())
+        assert(r.body().contains("\"written\":3"), r.body())
+      } finally svc.stop()
+      val st = new GraphStore(dir, spark)
+      (st.nodes.drop("recorded").collect().toSet,
+        st.edges.drop("recorded").collect().toSet)
+    }
+    val (arrayNodes, arrayEdges) = committed(ents.mkString("[", ",", "]"))
+    val (lineNodes, lineEdges) = committed(ents.mkString("\n"))
+    assert(arrayNodes.size == 3 && arrayEdges.size == 3)
+    assert(arrayNodes == lineNodes)
+    assert(arrayEdges == lineEdges)
   }
 
   test("error contracts: unknown dataset 404, bad inputs 400") {

@@ -2,19 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test run. */
+/** One shared local session for the whole test run: the product's
+  * session on a fixed 4 cores, so plan-shape and partition-count
+  * assertions do not depend on the machine. */
 object SparkTestSession {
-  lazy val get: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val get: SparkSession = GraftSession(4)
 }

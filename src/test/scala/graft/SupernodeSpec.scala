@@ -43,36 +43,21 @@ class SupernodeSpec extends AnyFunSuite {
 
   test("100k-degree COLLECT completes with no single-task funnel") {
     val store = st // materialize the fixture BEFORE metering tasks
-    val maxRead = new java.util.concurrent.atomic.AtomicLong(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          val r = m.shuffleReadMetrics.recordsRead
-          var cur = maxRead.get()
-          while (r > cur && !maxRead.compareAndSet(cur, r))
-            cur = maxRead.get()
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    val n = try {
-      val rows = CypherEngine.query(store,
+    val (n, counts) = SparkCounts.of(spark) {
+      CypherEngine.query(store,
         """MATCH (h:Hub)-[:X]->(m)
           |RETURN h.gid AS g, size(collect(m.gid)) AS n""".stripMargin)
-        .collect()
-      Thread.sleep(1000) // listener bus drain
-      rows.head.getLong(1)
-    } finally spark.sparkContext.removeSparkListener(l)
+        .collect().head.getLong(1)
+    }
+    val maxRead = counts.maxTaskShuffleRecordsRead
     assert(n == 100000L)
     // the hub's 100k rows never converge on ONE aggregation task:
     // the expand joins broadcast (no shuffle of the edge rows at
     // all), and the partial collect means the final agg task reads
     // one pre-merged row per map partition — max shuffle-read
     // records per task stays orders of magnitude below the degree
-    assert(maxRead.get() <= 20000,
-      s"a task read ${maxRead.get()} shuffle records — single-task funnel")
+    assert(maxRead <= 20000,
+      s"a task read $maxRead shuffle records — single-task funnel")
   }
 
   test("a group past graft.collect.maxSize raises a targeted error") {
