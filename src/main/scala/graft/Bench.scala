@@ -16,15 +16,9 @@ object Bench {
     */
   def timeOne(spark: SparkSession, sfDir: String, name: String,
       fn: Entry): Option[Double] = {
-    // each entry pays its OWN declared work: the cross-query RESULT
-    // memos (BPE merge table, MinHash pair graph, SimHash
-    // signatures, shingle intersections) are dropped before the
-    // timer starts, so no entry's declared computation arrives
-    // pre-warmed — not from the warmup block and not from an
-    // earlier timed entry (r15 verdict #1). The VectorOps IVF
-    // quantizer memo is NOT cleared: it is a trained index artifact
-    // shared the way the graph-store fixtures are.
-    queries.TextOps.clearMemos()
+    // each entry pays its OWN declared work: no result memo survives
+    // from the warmup or an earlier entry (fixtures do — see Memo)
+    Memo.clearResults()
     val t0 = System.nanoTime()
     val dt =
       try {
@@ -45,11 +39,10 @@ object Bench {
   /** Times every entry in order. Contention guard (VERDICT r6:
     * machine-contended captures cried wolf round over round): entries
     * over 2 s re-run once and keep the better time. timeOne clears the
-    * TextOps result memos before every run, so the re-run re-pays the
-    * same declared work its first run did — the min estimates the SAME
-    * work, not different work. (The IVF index memo stays warm in both
-    * runs, also symmetric.) An entry that throws on either run is left
-    * out.
+    * result memos before every run, so the re-run re-pays the same
+    * declared work its first run did — the min estimates the SAME
+    * work, not different work. (Fixture memos stay warm in both runs,
+    * also symmetric.) An entry that throws on either run is left out.
     */
   def timeAll(spark: SparkSession, sfDir: String,
       entries: Seq[(String, Entry)]): Seq[(String, Double)] =
@@ -101,18 +94,9 @@ object Bench {
       // build + search, not the family's shared quantizer
       SparkEntry.queries.get("v_knn_ivf")
         .foreach(_(spark, sfDir).count())
-      // Warmup rule (r15 verdict): STORES, INDEXES and base-table
-      // caches may warm; a registry entry's own RESULT may never.
-      // The r15 warmups for t_bpe_train / dedup_minhash_lsh /
-      // dedup_simhash / dedup_ngram_jaccard pre-computed those
-      // entries' declared work (the trained merges, the pair graph,
-      // the signatures, the shingle intersection) outside the timed
-      // region — that was gaming, and they are gone: timeOne now
-      // clears the TextOps result memos before every entry's timed
-      // run, so each entry pays its own declared computation exactly
-      // once. The IVF warmup above stays: the quantizer is a trained
-      // index artifact (the store/index side of the rule), not any
-      // entry's result.
+      // Warmup rule: stores, indexes and base-table caches (Memo
+      // fixtures) may warm; a registry entry's own result (a Memo
+      // result) may not — timeOne drops those before every entry.
     } catch { case e: Throwable =>
       System.err.println(s"[bench] warmup failed: $e")
     }

@@ -131,7 +131,7 @@ object CypherQ {
     // read-back groups what landed. The oracle replays the generator.
     "cypher_intx_ingest" -> ((s, dir) => {
       val st = new graft.store.GraphStore(
-        java.nio.file.Files.createTempDirectory("graft-intx-q").toString,
+        graft.Scratch.tempDir("graft-intx-q"),
         s, 4)
       CypherEngine.query(st,
         """UNWIND range(0, 24) AS k
@@ -253,7 +253,7 @@ object CypherQ {
     // resulting graph, oracled against the source table.
     "cypher_ref_templates" -> ((s, dir) => {
       val store = new graft.store.GraphStore(
-        java.nio.file.Files.createTempDirectory("graft-tpl").toString,
+        graft.Scratch.tempDir("graft-tpl"),
         s, numBuckets = 2)
       val rows = Relational.t(s, dir, "nation").collect()
       val items: Seq[Map[String, Any]] = rows.toSeq.map(r => Map(
@@ -512,7 +512,7 @@ DETACH DELETE n
     // from the raw parquet
     "cypher_list_props" -> ((s, dir) => {
       val store = new graft.store.GraphStore(
-        java.nio.file.Files.createTempDirectory("graft-lprops").toString,
+        graft.Scratch.tempDir("graft-lprops"),
         s, numBuckets = 2)
       val rows = Relational.t(s, dir, "nation").collect()
       val items: Seq[Map[String, Any]] = rows.toSeq.map(r => Map(
@@ -537,7 +537,7 @@ DETACH DELETE n
 
     "cypher_multilabel" -> ((s, dir) => {
       val store = new graft.store.GraphStore(
-        java.nio.file.Files.createTempDirectory("graft-mlab").toString,
+        graft.Scratch.tempDir("graft-mlab"),
         s, numBuckets = 2)
       val rows = Relational.t(s, dir, "nation").collect()
       val items: Seq[Map[String, Any]] = rows.toSeq.map(r => Map(
@@ -1217,15 +1217,12 @@ DETACH DELETE n
   /** embeddings table as :Emb nodes (gid `v:<vec_id>`, list prop
     * `emb`) with a trained vector index — built once per (session,
     * dir); entities build DISTRIBUTED from the parquet rows. */
-  private val embStores = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.store.GraphStore]
-
   private def embeddingStore(s: SparkSession,
       dir: String): graft.store.GraphStore =
-    embStores.getOrElseUpdate((s, dir), {
+    graft.Memo.fixture("CypherQ.embeddingStore", s, dir) {
       import s.implicits._
       val store = new graft.store.GraphStore(
-        java.nio.file.Files.createTempDirectory("graft-vidx-q").toString,
+        graft.Memo.tempDir("graft-vidx-q"),
         s, 8)
       val ents = Relational.t(s, dir, "embeddings")
         .select($"vec_id".cast("long"),
@@ -1258,21 +1255,18 @@ DETACH DELETE n
            OPTIONS {indexConfig: {`graft.quantization`: 'sq8'}}""")
         .collect()
       store
-    })
+    }
 
   /** customer table as :Customer nodes (name + acctbal props) with a
     * declared property index on `name` — built once per (session,
     * dir), its own store so the shared customer-graph fixture's
     * version history stays untouched. */
-  private val pxStores = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.store.GraphStore]
-
   private def propIndexStore(s: SparkSession,
       dir: String): graft.store.GraphStore =
-    pxStores.getOrElseUpdate((s, dir), {
+    graft.Memo.fixture("CypherQ.propIndexStore", s, dir) {
       import s.implicits._
       val store = new graft.store.GraphStore(
-        java.nio.file.Files.createTempDirectory("graft-pidx-q").toString,
+        graft.Memo.tempDir("graft-pidx-q"),
         s, 8)
       val ents = Relational.t(s, dir, "customer")
         .select($"c_custkey".cast("long"), $"c_name",
@@ -1318,22 +1312,19 @@ DETACH DELETE n
         "CREATE POINT INDEX cxy FOR (c:Customer) ON (c.x, c.y)")
         .collect()
       store
-    })
+    }
 
   /** Customers synced in THREE incremental batches from different
     * datasets (ds0/ds1/ds2 by custkey mod 3) so the located_in edges
     * carry three distinct `source` values, plus a declared
     * RELATIONSHIP property index on r.source — the Neo4j 5
     * `CREATE INDEX FOR ()-[r:T]-() ON (r.source)` surface. */
-  private val relPxStores = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.store.GraphStore]
-
   private def relPropIndexStore(s: SparkSession,
       dir: String): graft.store.GraphStore =
-    relPxStores.getOrElseUpdate((s, dir), {
+    graft.Memo.fixture("CypherQ.relPropIndexStore", s, dir) {
       import s.implicits._
       val store = new graft.store.GraphStore(
-        java.nio.file.Files.createTempDirectory("graft-relpx-q").toString,
+        graft.Memo.tempDir("graft-relpx-q"),
         s, 8)
       (0 until 3).foreach { mod =>
         val ents = Relational.t(s, dir, "customer")
@@ -1351,21 +1342,18 @@ DETACH DELETE n
         "CREATE INDEX rsrc FOR ()-[r:located_in]-() ON (r.source)")
         .collect()
       store
-    })
+    }
 
   /** Customer nodes with a NODE KEY on (nation, name) and a
     * relationship-existence constraint — built once per (session,
     * dir); the veto batteries run at build so the registry entry's
     * read sees exactly the surviving state. */
-  private val cstrStores = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.store.GraphStore]
-
   private def constraintStore(s: SparkSession,
       dir: String): graft.store.GraphStore =
-    cstrStores.getOrElseUpdate((s, dir), {
+    graft.Memo.fixture("CypherQ.constraintStore", s, dir) {
       import s.implicits._
       val store = new graft.store.GraphStore(
-        java.nio.file.Files.createTempDirectory("graft-cstr-q").toString,
+        graft.Memo.tempDir("graft-cstr-q"),
         s, 8)
       val ents = Relational.t(s, dir, "customer")
         .select($"c_custkey".cast("long"), $"c_name",
@@ -1421,19 +1409,16 @@ DETACH DELETE n
       CypherEngine.query(store,
         "CREATE INDEX cname FOR (c:Customer) ON (c.name)").collect()
       store
-    })
+    }
 
   /** documents table as :Doc nodes (gid `d:<doc_id>`, string prop
     * `body`) with a fulltext index. */
-  private val docStores = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.store.GraphStore]
-
   private def documentStore(s: SparkSession,
       dir: String): graft.store.GraphStore =
-    docStores.getOrElseUpdate((s, dir), {
+    graft.Memo.fixture("CypherQ.documentStore", s, dir) {
       import s.implicits._
       val store = new graft.store.GraphStore(
-        java.nio.file.Files.createTempDirectory("graft-fidx-q").toString,
+        graft.Memo.tempDir("graft-fidx-q"),
         s, 8)
       val ents = Relational.t(s, dir, "documents")
         .select($"doc_id".cast("string"), $"text")
@@ -1447,21 +1432,18 @@ DETACH DELETE n
       CypherEngine.query(store,
         "CREATE FULLTEXT INDEX fidx FOR (x:Doc) ON EACH [x.body]").collect()
       store
-    })
+    }
 
   /** documents table as :Doc nodes with TWO text props (source,
     * body) and a MULTI-FIELD fulltext index — the per-field BM25F
     * fixture (field-scoped leaves score the named field's own
     * statistics, Lucene's model). */
-  private val docStores2 = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.store.GraphStore]
-
   private def documentStore2(s: SparkSession,
       dir: String): graft.store.GraphStore =
-    docStores2.getOrElseUpdate((s, dir), {
+    graft.Memo.fixture("CypherQ.documentStore2", s, dir) {
       import s.implicits._
       val store = new graft.store.GraphStore(
-        java.nio.file.Files.createTempDirectory("graft-fidx2-q").toString,
+        graft.Memo.tempDir("graft-fidx2-q"),
         s, 8)
       val ents = Relational.t(s, dir, "documents")
         .select($"doc_id".cast("string"), $"source", $"text")
@@ -1478,7 +1460,7 @@ DETACH DELETE n
         "CREATE FULLTEXT INDEX fidx2 FOR (x:Doc) " +
           "ON EACH [x.source, x.body]").collect()
       store
-    })
+    }
 
   val oracles: Map[String, String] = Map(
     "cypher_match_where" ->

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,27 +44,20 @@ object GraphOnTpch {
   }
 
   /** Shared full-merge run: nation entities (props + region refs)
-    * through the real applyBatch into a fresh temp store. Memoized per
-    * (session, dir) so g_merge_nodes/g_merge_edges share one run.
-    */
-  private val mergedStores =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), GraphStore]
-
-  private def mergedNationStore(s: SparkSession, dir: String): GraphStore =
-    mergedStores.getOrElseUpdate((s, dir), buildMergedNationStore(s, dir))
-
-  /** shared with CypherQ: the Cypher registry queries run over the
-    * same applyBatch-built store.
+    * through the real applyBatch into a fresh temp store. A fixture
+    * memo, so g_merge_nodes/g_merge_edges and the Cypher registry
+    * queries (CypherQ) share one run.
     */
   private[graft] def nationStore(s: SparkSession, dir: String): GraphStore =
-    mergedNationStore(s, dir)
+    graft.Memo.fixture("GraphOnTpch.nationStore", s, dir)(
+      buildMergedNationStore(s, dir, graft.Memo.tempDir("graft-q")))
 
   /** a private store per call — for queries that MUTATE it
     * (cypher_delete); the memoized store must stay pristine for the
-    * read-only registry entries.
+    * read-only registry entries. Deleted at `Scratch.release()`.
     */
   private[graft] def freshNationStore(s: SparkSession, dir: String): GraphStore =
-    buildMergedNationStore(s, dir)
+    buildMergedNationStore(s, dir, graft.Scratch.tempDir("graft-q"))
 
   /** Non-toy Cypher fixture: the CUSTOMER graph at the scale factor's
     * real row count (10⁴-10⁵ nodes at sf0.1) through the real
@@ -77,15 +68,11 @@ object GraphOnTpch {
     * over it, so the hop machinery is gated on data whose hop 2 is
     * NON-empty (the 25-node star's hop 2 is empty by construction).
     */
-  private val customerStores =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), GraphStore]
-
   private[graft] def customerGraphStore(s: SparkSession,
       dir: String): GraphStore =
-    customerStores.getOrElseUpdate((s, dir), {
+    graft.Memo.fixture("GraphOnTpch.customerGraphStore", s, dir) {
       import s.implicits._
-      val store = new GraphStore(
-        Files.createTempDirectory("graft-custgraph").toString, s,
+      val store = new GraphStore(graft.Memo.tempDir("graft-custgraph"), s,
         numBuckets = 8)
       val cust = t(s, dir, "customer")
         .select($"c_custkey".cast("long"), $"c_name",
@@ -108,17 +95,17 @@ object GraphOnTpch {
       }
       GraphMerge.applyBatch(store, "nations", "Nation", nations.toDS())
       store
-    })
+    }
 
-  private def buildMergedNationStore(s: SparkSession, dir: String): GraphStore = {
+  private def buildMergedNationStore(s: SparkSession, dir: String,
+      storeDir: String): GraphStore = {
     import s.implicits._
     val entities = t(s, dir, "nation").collect().toSeq.map { r =>
       Entity(s"n:${r.getAs[Int]("n_nationkey")}")
         .withProp("http://g/prop#name", r.getAs[String]("n_name"))
         .withRef("http://g/rel#in_region", s"r:${r.getAs[Int]("n_regionkey")}")
     }
-    val store = new GraphStore(
-      Files.createTempDirectory("graft-q").toString, s, numBuckets = 2)
+    val store = new GraphStore(storeDir, s, numBuckets = 2)
     GraphMerge.applyBatch(store, "nations", "Nation", entities.toDS(),
       truncateFirst = true)
     store
@@ -340,7 +327,7 @@ object GraphOnTpch {
     // nodes out (stub regions included, label-less).
     "g_merge_nodes" -> ((s, dir) => {
       import s.implicits._
-      val store = mergedNationStore(s, dir)
+      val store = nationStore(s, dir)
       store.nodes.select($"gid", $"label",
         $"props".getItem("name").getField("s").as("name"))
         .orderBy($"gid")
@@ -349,7 +336,7 @@ object GraphOnTpch {
     // Same run, edge side: prefix-stripped rel_type, region targets.
     "g_merge_edges" -> ((s, dir) => {
       import s.implicits._
-      val store = mergedNationStore(s, dir)
+      val store = nationStore(s, dir)
       store.edges.select($"src", $"relType".as("rel_type"), $"dst")
         .orderBy($"src")
     }))

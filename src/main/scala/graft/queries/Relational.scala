@@ -34,30 +34,14 @@ object Relational {
     * query plan, so the pinned Repartition-free plans are unchanged.
     * A table that already scans with ≥8 splits passes through
     * untouched — at real scale this helper is an identity. */
-  private val docsRelayout = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   private def docsTable(s: SparkSession, dir: String): DataFrame = {
     val src = s"$dir/documents.parquet"
-    val path = docsRelayout.getOrElseUpdate((s, src), {
+    val path = graft.Memo.fixture("Relational.docsTable", s, src) {
       val df = s.read.parquet(src)
       if (df.inputFiles.length >= 8 || df.rdd.getNumPartitions >= 8) src
       else {
-        val outDir = java.nio.file.Files
-          .createTempDirectory("graft-docs-relayout")
-        // the scratch copy lives for the host's lifetime — reclaim it
-        // on JVM exit (it holds a full copy of the documents table)
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          def rm(p: java.nio.file.Path): Unit = {
-            if (java.nio.file.Files.isDirectory(p)) {
-              val st = java.nio.file.Files.list(p)
-              try st.forEach(rm(_)) finally st.close()
-            }
-            java.nio.file.Files.deleteIfExists(p); ()
-          }
-          try rm(outDir) catch { case _: Throwable => () }
-        }))
-        val out = outDir.toString
+        // a full copy of the documents table, deleted at JVM exit
+        val out = graft.Memo.tempDir("graft-docs-relayout")
         // keyed layout: deterministic file contents across runs. The
         // split count derives from the INPUT SIZE (≥8 for the
         // parallelism the relayout exists to restore, +1 split per
@@ -79,7 +63,7 @@ object Relational {
           .write.mode("overwrite").parquet(out)
         out
       }
-    })
+    }
     s.read.parquet(path)
   }
 

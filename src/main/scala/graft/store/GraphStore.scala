@@ -2730,170 +2730,110 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
       .reduce(_ unionByName _)
     val local = surf.take(GraphStore.LtCap + 1)
     if (local.isEmpty) return (prevOut, prevIn)
-    if (local.length > GraphStore.LtCap)
-      return ltDeltaDistributed(surf, prevOut, prevIn, prevEdges,
-        prevRedges, nodesMan, bc)
-    // driver-side: the churn is interactive-sized — resolve buckets
-    // here and probe with broadcast local relations (job 2 of 2)
-    val churnL = local.filter(_.getString(0) == "n")
-    val echurnL = local.filter(_.getString(0) == "e")
-    val deltas = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def sepOk(a: Column, b: Column): Column =
-      a.isNotNull && b.isNotNull
-    if (churnL.nonEmpty) {
-      // term B: (l1 − l0) replayed over the churned nodes' OLD edges
-      // (src-hash buckets) and redges (dst-hash buckets)
-      val cb = churnL.map(r => bucketOfString(r.getString(1))).toSet
-      def atBuckets(man: Map[String, Seq[String]]): Seq[String] =
-        man.view.filterKeys(k =>
-          cb.exists(b => k.endsWith(s"/bucket=$b")))
-          .values.flatten.toSeq.sorted
-      val churnDf = spark.createDataFrame(
-        java.util.Arrays.asList(churnL.map(r =>
-          Row(r.getString(1), r.getString(2), r.getString(3))): _*),
-        StructType(Seq(
-          StructField("cgid", StringType, nullable = false),
-          StructField("l0", StringType),
-          StructField("l1", StringType))))
-      val outOld = readFiles("edges", atBuckets(prevEdges), edgeSchema)
-        .select(col("src"), col("relType"))
-        .join(org.apache.spark.sql.functions.broadcast(
-          churnDf.withColumnRenamed("cgid", "src")), Seq("src"))
-      deltas += outOld.filter(sepOk(col("l1"), col("relType")))
-        .select(lit("o").as("side"),
-          ltKeyOr(concat(col("l1"), lit(LtSep), col("relType")), col("l1"), col("relType")).as("k"),
-          lit(1L).as("d"))
-      deltas += outOld.filter(sepOk(col("l0"), col("relType")))
-        .select(lit("o").as("side"),
-          ltKeyOr(concat(col("l0"), lit(LtSep), col("relType")), col("l0"), col("relType")).as("k"),
-          lit(-1L).as("d"))
-      val inOld = readFiles("redges", atBuckets(prevRedges), redgeSchema)
-        .select(col("dst"), col("relType"))
-        .join(org.apache.spark.sql.functions.broadcast(
-          churnDf.withColumnRenamed("cgid", "dst")), Seq("dst"))
-      deltas += inOld.filter(sepOk(col("l1"), col("relType")))
-        .select(lit("i").as("side"),
-          ltKeyOr(concat(col("relType"), lit(LtSep), col("l1")), col("relType"), col("l1")).as("k"),
-          lit(1L).as("d"))
-      deltas += inOld.filter(sepOk(col("l0"), col("relType")))
-        .select(lit("i").as("side"),
-          ltKeyOr(concat(col("relType"), lit(LtSep), col("l0")), col("relType"), col("l0")).as("k"),
-          lit(-1L).as("d"))
+    val churnSchema = StructType(Seq(
+      StructField("cgid", StringType, nullable = false),
+      StructField("l0", StringType),
+      StructField("l1", StringType)))
+    val churnESchema = StructType(Seq(
+      StructField("src", StringType, nullable = false),
+      StructField("dst", StringType, nullable = false),
+      StructField("relType", StringType, nullable = false),
+      StructField("d", LongType, nullable = false)))
+    if (local.length <= GraphStore.LtCap) {
+      // driver-side: the churn is interactive-sized — resolve buckets
+      // here and probe with broadcast local relations (job 2 of 2)
+      val churnL = local.filter(_.getString(0) == "n")
+      val echurnL = local.filter(_.getString(0) == "e")
+      def localDf(rows: Seq[Row], schema: StructType): DataFrame =
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      ltDeltaTerms(
+        localDf(churnL.map(r =>
+          Row(r.getString(1), r.getString(2), r.getString(3))), churnSchema),
+        churnL.map(r => bucketOfString(r.getString(1))).toSet,
+        localDf(echurnL.map(r => Row(r.getString(1), r.getString(2),
+          r.getString(3), r.getLong(4))), churnESchema),
+        echurnL.flatMap(r => Seq(bucketOfString(r.getString(1)),
+          bucketOfString(r.getString(2)))).toSet,
+        org.apache.spark.sql.functions.broadcast(_),
+        prevOut, prevIn, prevEdges, prevRedges, nodesMan)
+    } else {
+      // past LtCap (bulk-sized commits only): the same churn surface
+      // kept distributed — the bucket sets still collect (bounded at
+      // the store's bucket count), probes join the churn frame
+      import org.apache.spark.sql.functions.{array_union, collect_set}
+      val sc = surf.localCheckpoint()
+      val (isN, isE) = (col("t") === "n", col("t") === "e")
+      def bucket(c: String): Column = pmod(hash(col(c)), lit(bc))
+      val bs = sc.agg(collect_set(when(isN, bucket("c1"))),
+        array_union(collect_set(when(isE, bucket("c1"))),
+          collect_set(when(isE, bucket("c2"))))).head()
+      ltDeltaTerms(
+        sc.filter(isN).select(col("c1").as("cgid"), col("c2").as("l0"),
+          col("c3").as("l1")),
+        bs.getSeq[Int](0).toSet,
+        sc.filter(isE).select(col("c1").as("src"), col("c2").as("dst"),
+          col("c3").as("relType"), col("d")),
+        bs.getSeq[Int](1).toSet,
+        identity,
+        prevOut, prevIn, prevEdges, prevRedges, nodesMan)
     }
-    if (echurnL.nonEmpty) {
-      // term A: ±1 per churned edge, valued at the NEW snapshot's
-      // endpoint labels (read from the just-written manifest files,
-      // endpoint-bucket-pruned)
-      val eb = echurnL.flatMap(r => Seq(bucketOfString(r.getString(1)),
-        bucketOfString(r.getString(2)))).toSet
-      val nlab = readFiles("nodes",
-        nodesMan.view.filterKeys(k =>
-          eb.exists(b => k.endsWith(s"/bucket=$b")))
-          .values.flatten.toSeq.sorted, nodeSchema)
-        .select(col("gid"), col("label"))
-      val churnEDf = spark.createDataFrame(
-        java.util.Arrays.asList(echurnL.map(r =>
-          Row(r.getString(1), r.getString(2), r.getString(3),
-            r.getLong(4))): _*),
-        StructType(Seq(
-          StructField("src", StringType, nullable = false),
-          StructField("dst", StringType, nullable = false),
-          StructField("relType", StringType, nullable = false),
-          StructField("d", LongType, nullable = false))))
-      deltas += nlab.withColumnRenamed("gid", "src")
-        .join(org.apache.spark.sql.functions.broadcast(churnEDf),
-          Seq("src"))
-        .filter(sepOk(col("label"), col("relType")))
-        .select(lit("o").as("side"),
-          ltKeyOr(concat(col("label"), lit(LtSep), col("relType")), col("label"), col("relType")).as("k"),
-          col("d"))
-      deltas += nlab.withColumnRenamed("gid", "dst")
-        .join(org.apache.spark.sql.functions.broadcast(churnEDf),
-          Seq("dst"))
-        .filter(sepOk(col("label"), col("relType")))
-        .select(lit("i").as("side"),
-          ltKeyOr(concat(col("relType"), lit(LtSep), col("label")), col("relType"), col("label")).as("k"),
-          col("d"))
-    }
-    val agg = deltas.reduce(_ unionByName _)
-      .groupBy(col("side"), col("k")).agg(fsum(col("d")).as("d"))
-      .collect()
-    (GraphStore.ltApply(prevOut, agg, "o"),
-      GraphStore.ltApply(prevIn, agg, "i"))
   }
 
-  /** the past-LtCap twin of the incremental lt path: the same churn
-    * surface kept distributed — bucket sets still collect (bounded at
-    * the store's bucket count), probes join the churn frame instead
-    * of a broadcast local relation. Bulk-sized commits only. */
-  private def ltDeltaDistributed(
-      surf: DataFrame,
+  /** the incremental lt delta over a commit's churn, applied to the
+    * previous sections. Six terms, summed per (side, key):
+    *  - term B, over `churn` (cgid, l0, l1): (l1 − l0) replayed over
+    *    the churned nodes' OLD edges (src-hash buckets) and redges
+    *    (dst-hash buckets), `churnB` being those buckets;
+    *  - term A, over `churnE` (src, dst, relType, d): d per churned
+    *    edge, valued at the NEW snapshot's endpoint labels (read from
+    *    the just-written manifest's endpoint buckets `churnEB`).
+    * An empty bucket set means no churn of that kind, so its terms
+    * read nothing. `probe` wraps the churn side of every join. */
+  private def ltDeltaTerms(
+      churn: DataFrame, churnB: Set[Int],
+      churnE: DataFrame, churnEB: Set[Int],
+      probe: DataFrame => DataFrame,
       prevOut: Map[String, Long], prevIn: Map[String, Long],
       prevEdges: Map[String, Seq[String]],
       prevRedges: Map[String, Seq[String]],
-      nodesMan: Map[String, Seq[String]],
-      bc: Int): (Map[String, Long], Map[String, Long]) = {
+      nodesMan: Map[String, Seq[String]])
+      : (Map[String, Long], Map[String, Long]) = {
     import GraphStore.LtSep
-    import org.apache.spark.sql.functions.{broadcast, concat, sum => fsum}
-    val s = surf.localCheckpoint()
-    val churn = s.filter(col("t") === "n")
-      .select(col("c1").as("cgid"), col("c2").as("l0"),
-        col("c3").as("l1"))
-    val churnE = s.filter(col("t") === "e")
-      .select(col("c1").as("src"), col("c2").as("dst"),
-        col("c3").as("relType"), col("d"))
-    def sepOk(a: Column, b: Column): Column =
-      a.isNotNull && b.isNotNull
-    val buckets = churn
-      .select(pmod(hash(col("cgid")), lit(bc)).as("b"))
-      .unionByName(churnE.select(pmod(hash(col("src")), lit(bc)).as("b")))
-      .unionByName(churnE.select(pmod(hash(col("dst")), lit(bc)).as("b")))
-      .withColumn("t", lit("x"))
-      .groupBy(col("t"))
-      .agg(org.apache.spark.sql.functions.collect_set(col("b")).as("bs"))
-      .collect()
-    val allB: Set[Int] = buckets.headOption
-      .map(_.getSeq[Int](1).toSet).getOrElse(Set.empty)
-    def atBuckets(man: Map[String, Seq[String]]): Seq[String] =
-      man.view.filterKeys(k => allB.exists(b => k.endsWith(s"/bucket=$b")))
+    import org.apache.spark.sql.functions.{concat, sum => fsum}
+    def atBuckets(man: Map[String, Seq[String]], bs: Set[Int]): Seq[String] =
+      man.view.filterKeys(k => bs.exists(b => k.endsWith(s"/bucket=$b")))
         .values.flatten.toSeq.sorted
+    // ±d per row whose label column `l` and relType are both set; the
+    // out side keys label·relType, the in side relType·label
+    def term(side: String, df: DataFrame, l: String, d: Column): DataFrame = {
+      val (a, b) =
+        if (side == "o") (col(l), col("relType")) else (col("relType"), col(l))
+      df.filter(col(l).isNotNull && col("relType").isNotNull)
+        .select(lit(side).as("side"),
+          ltKeyOr(concat(a, lit(LtSep), b), a, b).as("k"), d.as("d"))
+    }
     val deltas = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val outOld = readFiles("edges", atBuckets(prevEdges), edgeSchema)
-      .select(col("src"), col("relType"))
-      .join(churn.withColumnRenamed("cgid", "src"), Seq("src"))
-    deltas += outOld.filter(sepOk(col("l1"), col("relType")))
-      .select(lit("o").as("side"),
-        ltKeyOr(concat(col("l1"), lit(LtSep), col("relType")), col("l1"), col("relType")).as("k"),
-        lit(1L).as("d"))
-    deltas += outOld.filter(sepOk(col("l0"), col("relType")))
-      .select(lit("o").as("side"),
-        ltKeyOr(concat(col("l0"), lit(LtSep), col("relType")), col("l0"), col("relType")).as("k"),
-        lit(-1L).as("d"))
-    val inOld = readFiles("redges", atBuckets(prevRedges), redgeSchema)
-      .select(col("dst"), col("relType"))
-      .join(churn.withColumnRenamed("cgid", "dst"), Seq("dst"))
-    deltas += inOld.filter(sepOk(col("l1"), col("relType")))
-      .select(lit("i").as("side"),
-        ltKeyOr(concat(col("relType"), lit(LtSep), col("l1")), col("relType"), col("l1")).as("k"),
-        lit(1L).as("d"))
-    deltas += inOld.filter(sepOk(col("l0"), col("relType")))
-      .select(lit("i").as("side"),
-        ltKeyOr(concat(col("relType"), lit(LtSep), col("l0")), col("relType"), col("l0")).as("k"),
-        lit(-1L).as("d"))
-    val nlab = readFiles("nodes", atBuckets(nodesMan), nodeSchema)
-      .select(col("gid"), col("label"))
-    deltas += nlab.withColumnRenamed("gid", "src")
-      .join(churnE, Seq("src"))
-      .filter(sepOk(col("label"), col("relType")))
-      .select(lit("o").as("side"),
-        ltKeyOr(concat(col("label"), lit(LtSep), col("relType")), col("label"), col("relType")).as("k"),
-        col("d"))
-    deltas += nlab.withColumnRenamed("gid", "dst")
-      .join(churnE, Seq("dst"))
-      .filter(sepOk(col("label"), col("relType")))
-      .select(lit("i").as("side"),
-        ltKeyOr(concat(col("relType"), lit(LtSep), col("label")), col("relType"), col("label")).as("k"),
-        col("d"))
+    if (churnB.nonEmpty) {
+      val outOld = readFiles("edges", atBuckets(prevEdges, churnB), edgeSchema)
+        .select(col("src"), col("relType"))
+        .join(probe(churn.withColumnRenamed("cgid", "src")), Seq("src"))
+      val inOld = readFiles("redges", atBuckets(prevRedges, churnB),
+          redgeSchema)
+        .select(col("dst"), col("relType"))
+        .join(probe(churn.withColumnRenamed("cgid", "dst")), Seq("dst"))
+      deltas += term("o", outOld, "l1", lit(1L)) +=
+        term("o", outOld, "l0", lit(-1L)) +=
+        term("i", inOld, "l1", lit(1L)) +=
+        term("i", inOld, "l0", lit(-1L))
+    }
+    if (churnEB.nonEmpty) {
+      val nlab = readFiles("nodes", atBuckets(nodesMan, churnEB), nodeSchema)
+        .select(col("gid"), col("label"))
+      deltas += term("o", nlab.withColumnRenamed("gid", "src")
+        .join(probe(churnE), Seq("src")), "label", col("d")) +=
+        term("i", nlab.withColumnRenamed("gid", "dst")
+          .join(probe(churnE), Seq("dst")), "label", col("d"))
+    }
     val agg = deltas.reduce(_ unionByName _)
       .groupBy(col("side"), col("k")).agg(fsum(col("d")).as("d"))
       .collect()

@@ -713,12 +713,20 @@ object SearchIndexes {
   /** driver twin of [[rangeBucketExpr]]: UTF8String.compareTo IS the
     * executor's string ordering (Java String.compareTo differs for
     * supplementary-plane characters — using it here could map a probe
-    * bound into the wrong bucket and silently skip files) */
+    * bound into the wrong bucket and silently skip files). Boundaries
+    * are in that order ([[trainBoundaries]] sorts them), so the count
+    * of boundaries ≤ v is a binary search for the first one above v. */
   def rangeBucketOf(boundaries: Seq[String], v: String): Int = {
-    val uv = org.apache.spark.unsafe.types.UTF8String.fromString(v)
-    boundaries.count(b =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(b)
-        .compareTo(uv) <= 0)
+    import org.apache.spark.unsafe.types.UTF8String
+    val bs = boundaries.toIndexedSeq
+    val uv = UTF8String.fromString(v)
+    var (lo, hi) = (0, bs.size)
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (UTF8String.fromString(bs(mid)).compareTo(uv) <= 0) lo = mid + 1
+      else hi = mid
+    }
+    lo
   }
 
   /** Train the `sect=r` boundaries from the snapshot's range rows:

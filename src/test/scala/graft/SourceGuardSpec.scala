@@ -6,9 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-level guards: every session comes from `GraftSession`, and
-  * the program reads no environment knob beyond the two it documents.
-  * A pure text scan of `src/` — no Spark.
+/** Source-level guards: every session comes from `GraftSession`, the
+  * program reads no environment knob beyond the two it documents, and
+  * the registry keeps no memo or temporary directory outside
+  * `Memo`/`Scratch`. A pure text scan of `src/` — no Spark.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val src = Paths.get(sys.props("user.dir"), "src")
@@ -52,5 +53,22 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(reads.nonEmpty, s"no environment reads found under $src")
     assert(offenders.isEmpty,
       s"environment knobs outside $allowed:\n${offenders.mkString("\n")}")
+  }
+
+  test("registry memos and temporary directories go through Memo or Scratch") {
+    // a memo map outlives the entry that filled it with no lifetime
+    // (Bench cannot clear it, nothing deletes its store): TrieMap, a
+    // map keyed by SparkSession, or a temporary directory made here
+    val mapBySession = """Map\b.*\[\(?SparkSession\b""".r
+    val queries = scalaFiles(src.resolve("main/scala/graft/queries"))
+    val offenders = (hits(queries, "TrieMap") ++
+      hits(queries, "createTempDirectory") ++
+      hits(queries, "SparkSession").filter { case (_, line) =>
+        mapBySession.findFirstIn(line).isDefined })
+      .distinct.sorted
+    assert(queries.nonEmpty, s"no registry sources under $src")
+    assert(offenders.isEmpty,
+      s"use graft.Memo (fixture/result/tempDir) or graft.Scratch.tempDir:\n" +
+        offenders.mkString("\n"))
   }
 }
