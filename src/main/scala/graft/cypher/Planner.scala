@@ -231,7 +231,8 @@ class Planner(store: GraphStore, params: Map[String, Any] = Map.empty) {
     // UNION [ALL]: each part plans standalone (fresh planner — its own
     // env/bindings); the FINAL part's ORDER BY / SKIP / LIMIT scope to
     // the whole union, so they are stripped from the branch and
-    // re-applied on the combined frame
+    // re-applied on the combined frame. Parts align by column NAME,
+    // in the first part's order
     val (lastAll, lastQ) = q.unions.last
     val branches =
       (q.copy(unions = Nil) +: q.unions.init.map(_._2)) :+
@@ -242,7 +243,7 @@ class Planner(store: GraphStore, params: Map[String, Any] = Map.empty) {
     }
     val names = frames.head.columns.toSeq
     frames.tail.foreach { f =>
-      if (f.columns.toSeq != names)
+      if (f.columns.toSeq.sorted != names.sorted)
         throw PlanError("UNION parts must return the same columns: " +
           s"$names vs ${f.columns.toSeq}")
     }
@@ -3363,7 +3364,7 @@ class Planner(store: GraphStore, params: Map[String, Any] = Map.empty) {
       part.items.forall(i => containsAgg(i.expr))
     val frames = parts0.map { part =>
       val partNames = part.items.map(_.name)
-      if (partNames != names) throw PlanError(
+      if (partNames.sorted != names.sorted) throw PlanError(
         s"UNION parts must return the same columns: $names vs $partNames")
       val withKeys = part.copy(
         items = part.items ++ keyCols.map { case (v, k) =>
@@ -5104,9 +5105,9 @@ class Planner(store: GraphStore, params: Map[String, Any] = Map.empty) {
     * single-aggregation plan; boolean trees aggregate a per-doc
     * matched-atom BITMASK (one union + one groupBy, no joins between
     * atoms) and filter on the tree evaluated over the mask. Phrases
-    * post-verify contiguity against the stored text of their
-    * candidate docs only (conjunctive term match first — bounded by
-    * the rarest term's postings). Atoms under an odd number of NOTs
+    * verify on the positional postings of their conjunctive
+    * candidates (bounded by the rarest term's postings); the stored
+    * text is never read. Atoms under an odd number of NOTs
     * never contribute score. Pure-negative queries (satisfiable with
     * zero matched atoms) are rejected — they would need a corpus
     * enumeration, as in Lucene.
@@ -5116,24 +5117,15 @@ class Planner(store: GraphStore, params: Map[String, Any] = Map.empty) {
     import graft.store.{FulltextQuery => FQ, SearchIndexes}
     import scala.collection.mutable
     // the `{analyzer: …}` option re-analyzes the QUERY string only;
-    // corpus-side tokenization (the unindexed fallback, its stats,
-    // phrase contiguity verification) always uses the analyzer the
-    // index was BUILT with — otherwise the same query would return
-    // different hit sets depending on whether the index is ready,
-    // and phrase candidates (from d.analyzer postings) would verify
-    // under a different tokenization
+    // corpus-side tokenization (the unindexed fallback and its stats)
+    // always uses the analyzer the index was BUILT with — otherwise
+    // the same query would return different hit sets depending on
+    // whether the index is ready
     val corpusAnalyzer = d.analyzer
     val raw =
       try FQ.parse(q)
       catch { case e: FQ.ParseError => throw PlanError(e.getMessage) }
     val indexReady = store.searchIndexReady(d)
-    // PER-FIELD postings available? (the sect=f marker) — field-scoped
-    // leaves then score per-field BM25F straight off the index; the
-    // unindexed overlay fallback tokenizes fresh, so it is always
-    // per-field-capable (modulo the pre-positional test hook)
-    val fieldsReady =
-      if (indexReady) store.ftFieldsReady(d)
-      else SearchIndexes.positionsEnabled
 
     sealed trait Atom
     case class ATerm(t: String) extends Atom
@@ -5141,15 +5133,11 @@ class Planner(store: GraphStore, params: Map[String, Any] = Map.empty) {
     // slop 0 = exact phrase; >0 = Lucene proximity window over the
     // POSITIONAL postings (adjusted positions within `slop`)
     case class APhrase(ts: Seq[String], slop: Int) extends Atom
-    // field-scoped leaves (`title:spark`): on a PER-FIELD posting
-    // table (the sect=f marker) they are pure index reads scoring
-    // true per-field BM25F — the field's own tf/dl, its own
-    // collection statistics (docCount, avgdl), its own df — with
-    // field-LOCAL positional verification for phrases; no stored-text
-    // access. On a legacy (concatenated) table candidates come from
-    // the shared concatenated contributions and post-verify against
-    // the named field's own text, scoring with the unscoped BM25
-    // contribution (the pre-field model, kept for back-compat).
+    // field-scoped leaves (`title:spark`): pure reads of the
+    // PER-FIELD postings scoring true per-field BM25F — the field's
+    // own tf/dl, its own collection statistics (docCount, avgdl), its
+    // own df — with field-LOCAL positional verification for phrases;
+    // no stored-text access.
     case class AFTerm(f: String, t: String) extends Atom
     case class AFPrefix(f: String, p: String) extends Atom
     case class AFPhrase(f: String, ts: Seq[String], slop: Int) extends Atom
@@ -5211,10 +5199,6 @@ class Planner(store: GraphStore, params: Map[String, Any] = Map.empty) {
         if (!d.properties.contains(f)) throw PlanError(
           s"index ${d.name} has no field $f " +
             s"(fields: ${d.properties.mkString(", ")})")
-        def rebuildErr(what: String): Nothing = throw PlanError(
-          s"field-scoped $what needs per-field postings; index " +
-            s"${d.name} was built before per-field postings existed " +
-            "— rebuild it (DROP + CREATE, or compact())")
         inner match {
           case FQ.Term(t) => SearchIndexes.analyze(t, analyzer) match {
             case Seq() => throw PlanError(
@@ -5229,8 +5213,6 @@ class Planner(store: GraphStore, params: Map[String, Any] = Map.empty) {
             case many => intern(AFPhrase(f, many, 0), pos, boost)
           }
           case FQ.Sloppy(p, n) =>
-            // proximity needs field-local positions — per-field only
-            if (!fieldsReady) rebuildErr("phrase slop")
             SearchIndexes.analyze(p, analyzer) match {
               case Seq() => throw PlanError(
                 s"field phrase '$p' analyzes to no tokens under $analyzer")
@@ -5243,8 +5225,6 @@ class Planner(store: GraphStore, params: Map[String, Any] = Map.empty) {
               s"prefix '$p*' must analyze to one token, got $other")
           }
           case FQ.Fuzzy(t, k) =>
-            // edit-distance weighting needs the field's own stats
-            if (!fieldsReady) rebuildErr("fuzzy")
             SearchIndexes.analyze(t, analyzer) match {
               case Seq(one) => intern(AFFuzzy(f, one, k), pos, boost)
               case other => throw PlanError(
@@ -5341,32 +5321,19 @@ class Planner(store: GraphStore, params: Map[String, Any] = Map.empty) {
         ++ ranges.map(rangeCond))
       .reduce(_ || _)
 
-    // the index's document view — nodes' property text, or (for a
-    // relationship index) the edges' source text keyed by composite
-    // identity; used by the unindexed fallback and phrase verification
-    def docsView: DataFrame =
-      if (d.entity == "RELATIONSHIP")
-        SearchIndexes.edgeTexts(edgesInView, d)
-      else SearchIndexes.texts(nodesInView, d)
-    // field-resolved twin of docsView (per-field fallback tokenization)
-    def fieldDocsView: DataFrame =
-      if (d.entity == "RELATIONSHIP")
-        SearchIndexes.edgeFieldDocs(edgesInView, d)
-      else SearchIndexes.fieldDocs(nodesInView, d)
     val (toksRaw, statsDf, statsFDf) =
       if (indexReady) {
         // query-term-first: manifest keys prune to the terms' buckets
         // + the one stats row; no corpus scan, no corpus shuffle —
-        // the per-term groupBy below runs on posting rows. A prefix
-        // atom expands against the VOCABULARY-sized sect=d dictionary
-        // to its matching terms' buckets (reading the dictionary,
-        // never the postings) — only a pre-dictionary table falls
-        // back to the unpruned posting read
+        // the per-term groupBy below runs on posting rows. A prefix,
+        // fuzzy, wildcard or range atom expands against the
+        // VOCABULARY-sized sect=d dictionary to its matching terms'
+        // buckets (reading the dictionary, never the postings)
         val expanding = prefixes.nonEmpty || fuzzies.nonEmpty ||
           wilds.nonEmpty || ranges.nonEmpty
         val keep: String => Boolean =
           if (!expanding) store.ftProbeKeys(allTerms)
-          else if (store.ftDictReady(d)) {
+          else {
             val base = store.ftProbeKeys(allTerms)
             val dictCond = (wilds.map(w =>
               col("term").rlike(wildRegex(w))) ++ ranges.map(rangeCond))
@@ -5377,7 +5344,7 @@ class Planner(store: GraphStore, params: Map[String, Any] = Map.empty) {
                 .getOrElse(Set.empty[Int])
             (k: String) => base(k) ||
               pb.exists(b => k == s"sect=t/bucket=$b")
-          } else _ => true
+          }
         val idx = store.readSearchIndex(d, keep)
         val st = idx.filter(col("sect") === "s")
         (idx.filter(col("sect") === "t" && termCond),
@@ -5386,34 +5353,24 @@ class Planner(store: GraphStore, params: Map[String, Any] = Map.empty) {
           st.filter(col("gid").startsWith("__stats:"))
             .select(col("fld"), col("tf").as("fn_docs"),
               col("dl").as("fsum_dl")))
-      } else if (fieldsReady) {
-        // per-field overlay fallback: field-resolved fresh
-        // tokenization; the global stats tally the same clean token
-        // counts tokenRowsF stores (Σ dlt == the concatenated Σ dl)
-        val fdocs = fieldDocsView
+      } else {
+        // unindexed overlay fallback: the same per-field rows,
+        // tokenized fresh from the statement's view; the global stats
+        // tally the same clean token counts tokenRowsF stores
+        // (Σ dlt == the concatenated Σ dl)
+        val fdocs =
+          if (d.entity == "RELATIONSHIP")
+            SearchIndexes.edgeFieldDocs(edgesInView, d)
+          else SearchIndexes.fieldDocs(nodesInView, d)
         val allT = SearchIndexes.tokenRowsF(
           fdocs, d.properties, corpusAnalyzer)
-        val tot = aggregate(
-          transform(col("fs"), f =>
-            size(filter(SearchIndexes.termsOf(f, corpusAnalyzer),
-              t => t =!= "")).cast("long")),
-          lit(0L), (a, x) => a + x)
         (allT.filter(termCond),
           fdocs.agg(count(lit(1)).as("n_docs"),
-            sum(tot).cast("long").as("sum_dl")),
+            sum(SearchIndexes.docLength(col("fs"), corpusAnalyzer))
+              .cast("long").as("sum_dl")),
           SearchIndexes.fieldStatsRows(allT)
             .select(col("fld"), col("tf").as("fn_docs"),
               col("dl").as("fsum_dl")))
-      } else {
-        val docs = docsView
-        (SearchIndexes.tokenRows(docs, corpusAnalyzer).filter(termCond),
-          docs.agg(count(lit(1)).as("n_docs"),
-            sum(size(SearchIndexes.termsOf(col("text"), corpusAnalyzer)))
-              .cast("long").as("sum_dl")),
-          // unused when !fieldsReady — shape-compatible empty frame
-          nodesInView.sparkSession.emptyDataFrame
-            .select(lit("").as("fld"), lit(0L).as("fn_docs"),
-              lit(0L).as("fsum_dl")))
       }
     val needF = atoms.exists {
       case AFTerm(_, _) | AFPrefix(_, _) | AFPhrase(_, _, _)
@@ -5428,27 +5385,24 @@ class Planner(store: GraphStore, params: Map[String, Any] = Map.empty) {
     // reads only — the overlay fallback may be a folded local plan,
     // and an RDD leaf would un-fold every later statement
     val toksK =
-      if (fieldsReady && indexReady && (atoms.size > 1 || needF))
+      if (indexReady && (atoms.size > 1 || needF))
         toksRaw.localCheckpoint()
       else toksRaw
     // the concatenated-document view every unscoped atom scores
-    // against: per-field rows aggregate back BIT-EXACTLY to the
-    // pre-field shape (tf = Σ field tf, dl = the total document
-    // length dlt, pos = field-local positions + the field's offset) —
-    // unscoped scoring, phrases spanning field boundaries included,
-    // is unchanged by the per-field layout
-    val toks =
-      if (!fieldsReady) toksK
-      else toksK.groupBy(col("term"), col("gid"))
-        .agg(sum(col("tf")).as("tf"), max(col("dlt")).as("dl"),
-          sort_array(flatten(collect_list(
-            transform(col("pos"), x => x + col("off").cast("int")))))
-            .as("pos"))
+    // against: per-field rows aggregate back BIT-EXACTLY to one row
+    // per (term, gid) of the whole document (tf = Σ field tf, dl =
+    // the total document length dlt, pos = field-local positions +
+    // the field's offset) — so phrases may span field boundaries
+    val toks = toksK.groupBy(col("term"), col("gid"))
+      .agg(sum(col("tf")).as("tf"), max(col("dlt")).as("dl"),
+        sort_array(flatten(collect_list(
+          transform(col("pos"), x => x + col("off").cast("int")))))
+          .as("pos"))
     // BM25 (k1=1.2, b=0.75) — the t_bm25 kernel over the postings,
     // kept per (term, gid) so every atom shares it
     val dfreq = toks.groupBy(col("term"))
       .agg(count_distinct(col("gid")).as("dfreq"))
-    val contrib0 = toks.join(broadcast(dfreq), Seq("term"))
+    val contrib = toks.join(broadcast(dfreq), Seq("term"))
       .crossJoin(broadcast(statsDf))
       .withColumn("avgdl", col("sum_dl").cast("double") / col("n_docs"))
       .withColumn("idf", log(lit(1.0) +
@@ -5460,42 +5414,28 @@ class Planner(store: GraphStore, params: Map[String, Any] = Map.empty) {
           lit(1.2) * (lit(0.25) + lit(0.75) *
             (col("dl").cast("double") / col("avgdl")))))
       .select(col("term"), col("gid"), col("contrib"), col("pos"))
-    val contrib =
-      if (!fieldsReady && atoms.size > 1 && indexReady)
-        contrib0.localCheckpoint()
-      else contrib0
     // PER-FIELD BM25 contributions (Lucene's BM25F): the field's own
     // tf and dl against the field's own collection statistics
     // (docCount, Σdl) and per-field df — field-scoped leaves score
     // and positionally verify on these rows alone
-    val contribF: Option[DataFrame] =
-      if (!fieldsReady || !needF) None
-      else Some {
-        val dfreqF = toksK.groupBy(col("term"), col("fld"))
-          .agg(count_distinct(col("gid")).as("dfreq"))
-        toksK.join(broadcast(dfreqF), Seq("term", "fld"))
-          .join(broadcast(statsFDf), Seq("fld"))
-          .withColumn("avgdl",
-            col("fsum_dl").cast("double") / col("fn_docs"))
-          .withColumn("idf", log(lit(1.0) +
-            ((col("fn_docs") - col("dfreq")).cast("double") + 0.5) /
-              (col("dfreq").cast("double") + 0.5)))
-          .withColumn("contrib", col("idf") *
-            (col("tf").cast("double") * 2.2) /
-            (col("tf").cast("double") +
-              lit(1.2) * (lit(0.25) + lit(0.75) *
-                (col("dl").cast("double") / col("avgdl")))))
-          .select(col("fld"), col("term"), col("gid"), col("contrib"),
-            col("pos"))
-      }
-
-    // positional postings available? (the sect=q marker — a table
-    // built before positions existed keeps the stored-text fallback,
-    // and slop REQUIRES positions). The unindexed overlay fallback
-    // tokenizes fresh, so positions are always present there.
-    val posReady =
-      if (store.searchIndexReady(d)) store.ftPositionsReady(d)
-      else SearchIndexes.positionsEnabled
+    lazy val contribF: DataFrame = {
+      val dfreqF = toksK.groupBy(col("term"), col("fld"))
+        .agg(count_distinct(col("gid")).as("dfreq"))
+      toksK.join(broadcast(dfreqF), Seq("term", "fld"))
+        .join(broadcast(statsFDf), Seq("fld"))
+        .withColumn("avgdl",
+          col("fsum_dl").cast("double") / col("fn_docs"))
+        .withColumn("idf", log(lit(1.0) +
+          ((col("fn_docs") - col("dfreq")).cast("double") + 0.5) /
+            (col("dfreq").cast("double") + 0.5)))
+        .withColumn("contrib", col("idf") *
+          (col("tf").cast("double") * 2.2) /
+          (col("tf").cast("double") +
+            lit(1.2) * (lit(0.25) + lit(0.75) *
+              (col("dl").cast("double") / col("avgdl")))))
+        .select(col("fld"), col("term"), col("gid"), col("contrib"),
+          col("pos"))
+    }
 
     def isPureOr(n: N): Boolean = n match {
       case NLeaf(_) => true
@@ -5509,72 +5449,6 @@ class Planner(store: GraphStore, params: Map[String, Any] = Map.empty) {
       return contrib.groupBy(col("gid"))
         .agg(sum(col("contrib")).as("score"))
 
-    // conjunctive candidates of a token sequence (bounded by the
-    // rarest token's postings) — shared by phrase atoms, scoped or not
-    def phraseCand(ts: Seq[String]): DataFrame =
-      contrib.filter(col("term").isin(ts.distinct: _*))
-        .groupBy(col("gid"))
-        .agg(count_distinct(col("term")).as("nt"),
-          sum(col("contrib")).as("s"))
-        .filter(col("nt") === ts.distinct.size)
-        .select(col("gid"), col("s"))
-    // ONE field's `(gid, text)` docs for the given candidates, read
-    // bucket-pruned when the committed table is the statement's view
-    def fieldTexts(f: String, gids: Seq[String]): DataFrame = {
-      val fd = d.copy(property = f)
-      if (d.entity == "RELATIONSHIP")
-        SearchIndexes.edgeTexts(edgesInView, fd)
-          .filter(col("gid").isin(gids: _*))
-      else {
-        val src =
-          if (store.searchIndexReady(d) && pendingNodes.isEmpty &&
-              pendingNodeDeletes.isEmpty)
-            SearchIndexes.texts(store.nodesByGidBuckets(
-              gids.map(store.bucketOfString).toSet), fd)
-          else SearchIndexes.texts(nodesInView, fd)
-        src.filter(col("gid").isin(gids: _*))
-      }
-    }
-    // candidate-bounded verification of a field-scoped leaf: keep the
-    // candidates whose NAMED field's own tokens satisfy `ok`
-    def fieldVerified(f: String, cand: DataFrame,
-        ok: Column => Column): DataFrame = {
-      val candLocal = cand.take(100001)
-      val spark = nodesInView.sparkSession
-      if (candLocal.length <= 100000) {
-        val candDf = spark.createDataFrame(
-          java.util.Arrays.asList(candLocal: _*), cand.schema)
-        if (candLocal.isEmpty) candDf
-        else fieldTexts(f, candLocal.map(_.getString(0)).toSeq)
-          .withColumn("__toks",
-            SearchIndexes.termsOf(col("text"), corpusAnalyzer))
-          .filter(ok(col("__toks")))
-          .select(col("gid"))
-          .join(broadcast(candDf), Seq("gid"))
-          .select(col("gid"), col("s"))
-      } else {
-        val fd = d.copy(property = f)
-        val docs = (if (d.entity == "RELATIONSHIP")
-            SearchIndexes.edgeTexts(edgesInView, fd)
-          else SearchIndexes.texts(nodesInView, fd))
-          .join(broadcast(cand.select(col("gid"))), Seq("gid"),
-            "left_semi")
-        docs.withColumn("__toks",
-            SearchIndexes.termsOf(col("text"), corpusAnalyzer))
-          .filter(ok(col("__toks")))
-          .select(col("gid"))
-          .join(broadcast(cand), Seq("gid"))
-          .select(col("gid"), col("s"))
-      }
-    }
-    def phraseOk(ts: Seq[String])(toks: Column): Column = {
-      val k = ts.size
-      val pharr = array(ts.map(lit): _*)
-      when(size(toks) >= k,
-        exists(sequence(lit(1), size(toks) - lit(k - 1)),
-          i => slice(toks, i, lit(k)) === pharr))
-        .otherwise(lit(false))
-    }
     // pure-index positional phrase/slop evaluation over a
     // (term, gid, contrib, pos) frame with ONE row per (term, gid) —
     // the concatenated contributions, or one field's slice of the
@@ -5638,121 +5512,35 @@ class Planner(store: GraphStore, params: Map[String, Any] = Map.empty) {
       case ARange(lo, hi, il, ih) =>
         contrib.filter(rangeCondOn(col("term"), lo, hi, il, ih))
           .groupBy(col("gid")).agg(sum(col("contrib")).as("s"))
-      case AFWild(f, w) if contribF.isDefined =>
-        contribF.get.filter(col("fld") === f &&
-          col("term").rlike(wildRegex(w)))
-          .groupBy(col("gid")).agg(sum(col("contrib")).as("s"))
-      case AFWild(f, w) =>
-        fieldVerified(f,
-          contrib.filter(col("term").rlike(wildRegex(w)))
-            .groupBy(col("gid")).agg(sum(col("contrib")).as("s")),
-          toks => exists(toks, x => x.rlike(wildRegex(w))))
-      case AFRange(f, lo, hi, il, ih) if contribF.isDefined =>
-        contribF.get.filter(col("fld") === f &&
-          rangeCondOn(col("term"), lo, hi, il, ih))
-          .groupBy(col("gid")).agg(sum(col("contrib")).as("s"))
-      case AFRange(f, lo, hi, il, ih) =>
-        fieldVerified(f,
-          contrib.filter(rangeCondOn(col("term"), lo, hi, il, ih))
-            .groupBy(col("gid")).agg(sum(col("contrib")).as("s")),
-          toks => exists(toks, x => rangeCondOn(x, lo, hi, il, ih)))
-      // field-scoped leaves on a PER-FIELD table: pure index reads
-      // scoring the field's own BM25 — no stored-text verification
-      case AFTerm(f, t) if contribF.isDefined =>
-        contribF.get.filter(col("fld") === f && col("term") === t)
-          .groupBy(col("gid")).agg(sum(col("contrib")).as("s"))
-      case AFPrefix(f, p) if contribF.isDefined =>
-        contribF.get
-          .filter(col("fld") === f && col("term").startsWith(p))
-          .groupBy(col("gid")).agg(sum(col("contrib")).as("s"))
-      case AFFuzzy(f, t, k) =>
-        // reachable only per-field (conv gates on fieldsReady)
-        contribF.get.filter(col("fld") === f && fuzzyCond(t, k))
-          .groupBy(col("gid"))
-          .agg(sum(col("contrib") * greatest(lit(0.0),
-            lit(1.0) - levenshtein(col("term"), lit(t)).cast("double") /
-              lit(t.length.toDouble))).as("s"))
-      case AFPhrase(f, ts, slop) if contribF.isDefined =>
-        posPhraseHits(contribF.get.filter(col("fld") === f), ts, slop)
-      // legacy (pre-field) table: candidates from the concatenated
-      // contributions, membership post-verified on the field's text
-      case AFTerm(f, t) =>
-        fieldVerified(f,
-          contrib.filter(col("term") === t).groupBy(col("gid"))
-            .agg(sum(col("contrib")).as("s")),
-          toks => array_contains(toks, t))
-      case AFPrefix(f, p) =>
-        fieldVerified(f,
-          contrib.filter(col("term").startsWith(p)).groupBy(col("gid"))
-            .agg(sum(col("contrib")).as("s")),
-          toks => exists(toks, x => x.startsWith(p)))
-      case AFPhrase(f, ts, _) =>
-        // slop is conv-gated to per-field tables, so only exact
-        // phrases reach the legacy stored-text verification
-        fieldVerified(f, phraseCand(ts), phraseOk(ts))
-      case APhrase(ts, slop) if posReady =>
+      case APhrase(ts, slop) =>
         // pure index read: candidates AND phrase/slop verification
         // both come from the POSITIONAL postings — the stored text is
         // never touched (Lucene's positional evaluation)
         posPhraseHits(contrib, ts, slop)
-      case APhrase(ts, slop) =>
-        if (slop > 0) throw PlanError(
-          s"phrase slop needs positional postings; index ${d.name} " +
-            "was built before positions existed — rebuild it " +
-            "(DROP + CREATE, or compact())")
-        val k = ts.size
-        val cand = phraseCand(ts)
-        // contiguity post-verify on the stored text, candidates only.
-        // The token array MUST materialize as a real column before
-        // the sliding-window exists() — HOF lambda bodies don't CSE,
-        // so an inline tokenizer would re-run lower+split+filter once
-        // PER WINDOW POSITION (O(len²) regex work per doc). The
-        // conjunctive candidate list is bounded by the RAREST term's
-        // postings — small enough to resolve driver-side, so the
-        // verify join becomes a LocalRelation probe (pruned by the
-        // gid IN-list); an unexpectedly huge list keeps the
-        // distributed join
-        val pharr = array(ts.map(lit): _*)
-        def verified(docs: DataFrame): DataFrame = {
-          val t = docs.withColumn("__toks",
-            SearchIndexes.termsOf(col("text"), corpusAnalyzer))
-          val ok = when(size(col("__toks")) >= k,
-            exists(sequence(lit(1), size(col("__toks")) - lit(k - 1)),
-              i => slice(col("__toks"), i, lit(k)) === pharr))
-            .otherwise(lit(false))
-          t.filter(ok).select(col("gid"))
-        }
-        val candLocal = cand.take(100001)
-        if (candLocal.length <= 100000) {
-          val spark = nodesInView.sparkSession
-          val candDf = spark.createDataFrame(
-            java.util.Arrays.asList(candLocal: _*), cand.schema)
-          if (candLocal.isEmpty) candDf
-          else {
-            val gids = candLocal.map(_.getString(0)).toSeq
-            // candidate docs read through the px route's recipe:
-            // list (and read) only the candidates' gid-hash bucket
-            // directories instead of the whole node-table file
-            // listing — a phrase query on a large corpus must not
-            // open every node file just to verify ≤100k candidates.
-            // Falls back to the overlay view whenever the committed
-            // table may not BE the statement's view (pending writes
-            // or deletes, relationship-sourced docs)
-            val docSrc =
-              if (d.entity != "RELATIONSHIP" && store.searchIndexReady(d)
-                  && pendingNodes.isEmpty && pendingNodeDeletes.isEmpty)
-                SearchIndexes.texts(store.nodesByGidBuckets(
-                  gids.map(store.bucketOfString).toSet), d)
-              else docsView
-            verified(docSrc.filter(col("gid").isin(gids: _*)))
-              .join(broadcast(candDf), Seq("gid"))
-              .select(col("gid"), col("s"))
-          }
-        } else verified(docsView
-            .join(broadcast(cand.select(col("gid"))), Seq("gid"),
-              "left_semi"))
-          .join(broadcast(cand), Seq("gid"))
-          .select(col("gid"), col("s"))
+      // field-scoped leaves: pure index reads scoring the field's own
+      // BM25 off the per-field contributions
+      case AFWild(f, w) =>
+        contribF.filter(col("fld") === f &&
+          col("term").rlike(wildRegex(w)))
+          .groupBy(col("gid")).agg(sum(col("contrib")).as("s"))
+      case AFRange(f, lo, hi, il, ih) =>
+        contribF.filter(col("fld") === f &&
+          rangeCondOn(col("term"), lo, hi, il, ih))
+          .groupBy(col("gid")).agg(sum(col("contrib")).as("s"))
+      case AFTerm(f, t) =>
+        contribF.filter(col("fld") === f && col("term") === t)
+          .groupBy(col("gid")).agg(sum(col("contrib")).as("s"))
+      case AFPrefix(f, p) =>
+        contribF.filter(col("fld") === f && col("term").startsWith(p))
+          .groupBy(col("gid")).agg(sum(col("contrib")).as("s"))
+      case AFFuzzy(f, t, k) =>
+        contribF.filter(col("fld") === f && fuzzyCond(t, k))
+          .groupBy(col("gid"))
+          .agg(sum(col("contrib") * greatest(lit(0.0),
+            lit(1.0) - levenshtein(col("term"), lit(t)).cast("double") /
+              lit(t.length.toDouble))).as("s"))
+      case AFPhrase(f, ts, slop) =>
+        posPhraseHits(contribF.filter(col("fld") === f), ts, slop)
     }
     // per-doc matched-atom bitmask + score in ONE aggregation; the
     // boolean tree then evaluates as a codegen'd mask predicate

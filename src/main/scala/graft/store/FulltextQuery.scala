@@ -9,7 +9,7 @@ package graft.store
   *  - `AND` / `OR` / `NOT` (uppercase, Lucene's convention), with
   *    NOT binding tightest, then AND, then OR/adjacency
   *  - quoted phrases: `"sort merge join"` (contiguous token match,
-  *    post-verified against the stored text)
+  *    verified on the positional postings)
   *  - trailing-star prefixes: `spar*`
   *  - parentheses for grouping
   *

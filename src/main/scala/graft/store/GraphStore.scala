@@ -352,7 +352,8 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
   /** is the declared index's table usable for queries right now?
     * False inside a session with uncommitted node writes (the
     * procedures then fall back to scanning the overlay view — correct,
-    * just unindexed, mirroring redgesReady).
+    * just unindexed, mirroring redgesReady), and for a fulltext table
+    * without its shape markers ([[SearchIndexes.ftMarked]]).
     */
   def searchIndexReady(d: IndexDef): Boolean = {
     // uncommitted writes to the index's SOURCE table make the on-disk
@@ -363,7 +364,8 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
       else session.exists(_.workNodes.isDefined)
     !staleWork && {
       val v = currentVersion
-      v > 0L && readManifest(v).contains(d.tableName)
+      v > 0L && readManifest(v).get(d.tableName).exists(keys =>
+        d.kind != "fulltext" || SearchIndexes.ftMarked(keys.keys))
     }
   }
 
@@ -401,30 +403,6 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
     (k: String) => k.startsWith("sect=s/") ||
       bs.exists(b => k == s"sect=t/bucket=$b")
   }
-
-  /** does the fulltext table carry its term-dictionary section?
-    * (tables built before the dictionary existed don't — prefix
-    * queries then fall back to the unpruned posting read until the
-    * next full rebuild regenerates both sections) */
-  def ftDictReady(d: IndexDef): Boolean =
-    manifestFiles(d.tableName).keys.exists(_.startsWith("sect=d"))
-
-  /** does the fulltext table carry POSITIONAL postings throughout?
-    * (the sect=q marker — written only by full builds of
-    * position-aware code, carried forward by deltas; tables built
-    * before it keep the stored-text phrase fallback, and slop gets a
-    * targeted rebuild error) */
-  def ftPositionsReady(d: IndexDef): Boolean =
-    manifestFiles(d.tableName).keys.exists(_.startsWith("sect=q"))
-
-  /** does the fulltext table carry PER-FIELD postings (the sect=f
-    * marker — fld/off/dlt populated, field-local positions, per-field
-    * stats rows)? Field-scoped leaves then score true per-field BM25F
-    * and verify membership straight off the index; tables built
-    * before the marker keep the concatenated shape and the
-    * stored-text field verification until a full rebuild. */
-  def ftFieldsReady(d: IndexDef): Boolean =
-    manifestFiles(d.tableName).keys.exists(_.startsWith("sect=f"))
 
   /** the H(term) posting buckets holding at least one term with any
     * of the prefixes — resolved from the VOCABULARY-sized `sect=d`
@@ -1495,20 +1473,28 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
       else
         (newNodes, dirtyNodes, prev.getOrElse("nodes", Map.empty),
           "nodes", nodeSchema, "label", "gid")
-    def docsOf(frame: DataFrame): DataFrame =
-      if (isRel) edgeTexts(frame, d) else texts(frame, d)
-    // per-field document view (same docs, fields resolved) — the
-    // build/delta source of per-field posting tables
+    // per-field document view — the build/delta source of posting
+    // tables — and its (doc count, Σ doc length) for the stats row
     def fieldDocsOf(frame: DataFrame): DataFrame =
       if (isRel) SearchIndexes.edgeFieldDocs(frame, d)
       else SearchIndexes.fieldDocs(frame, d)
+    def docStats(docs: DataFrame): (Long, Long) = {
+      val r = docs.agg(org.apache.spark.sql.functions.count(lit(1)),
+        org.apache.spark.sql.functions.sum(
+          SearchIndexes.docLength(col("fs"), d.analyzer))).head()
+      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    }
     // a def whose table is not in the previous manifest (fresh DDL)
     // builds fully; so does a full source rewrite (compact / rebucket)
     // and a just-(re)registered def whose NAME matches a dropped
     // index's carried-forward table (forceIndexRebuild0 — the stale
-    // rows belong to the OLD definition)
-    val mustRebuild = (!prev.contains(tbl) ||
-      forceIndexRebuild0.contains(d.name)) && prevSrc.nonEmpty
+    // rows belong to the OLD definition). A fulltext table without
+    // its shape markers (fresh DDL, even on an empty store, or a
+    // table written by older code) is rebuilt by whichever commit
+    // sees it next, so every delta below runs on the marked shape.
+    val mustRebuild = ((!prev.contains(tbl) ||
+      forceIndexRebuild0.contains(d.name)) && prevSrc.nonEmpty) ||
+      (d.kind == "fulltext" && !SearchIndexes.ftMarked(prevIdx.keys))
     // composite defs have no range section (a multi-key tuple has no
     // total order worth range-partitioning; only all-keys-equality
     // routes through them). A table built BEFORE the range section
@@ -1548,45 +1534,18 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
         val withR =
           if (hasRange) pr.unionByName(propRangeRows(srcNew, d)) else pr
         if (hasW) withR.unionByName(valueDictRows(pr)) else withR
-      case _ if SearchIndexes.positionsEnabled =>
+      case _ =>
         // per-field build: fld/off/dlt-bearing token rows, per-field
-        // stats alongside the global row, and both markers. Global
-        // stats tally the same clean token counts tokenRowsF stores
-        // (Σ dlt == the legacy concatenated Σ dl, so unscoped BM25 is
-        // bit-identical to the pre-field table's).
+        // stats alongside the global row, the dictionary and the
+        // sect=f marker. Global stats tally the same clean token counts
+        // tokenRowsF stores (Σ dlt == the concatenated Σ dl).
         val fdocs = fieldDocsOf(srcNew)
-        val tot = org.apache.spark.sql.functions.aggregate(
-          org.apache.spark.sql.functions.transform(col("fs"), f =>
-            org.apache.spark.sql.functions.size(
-              org.apache.spark.sql.functions.filter(
-                termsOf(f, d.analyzer), t => t =!= "")).cast("long")),
-          lit(0L), (a, x) => a + x)
-        val st = fdocs
-          .agg(org.apache.spark.sql.functions.count(lit(1)),
-            org.apache.spark.sql.functions.sum(tot).cast("long")).head()
-        val (n, sdl) =
-          (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
+        val (n, sdl) = docStats(fdocs)
         val toks = SearchIndexes.tokenRowsF(fdocs, d.properties, d.analyzer)
         toks.unionByName(statsRow(spark, n, sdl))
           .unionByName(SearchIndexes.fieldStatsRows(toks))
           .unionByName(dictRows(toks))
-          .unionByName(SearchIndexes.posMarkerRow(spark))
-          .unionByName(SearchIndexes.fieldsMarkerRow(spark))
-      case _ =>
-        // positions disabled (the pre-positional test hook): the
-        // legacy concatenated build — no positions, no per-field rows
-        val docs = docsOf(srcNew)
-        val st = docs
-          .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)),
-            org.apache.spark.sql.functions.sum(
-              org.apache.spark.sql.functions.size(
-                termsOf(col("text"), d.analyzer))).cast("long")).head()
-        val (n, sdl) =
-          (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
-        val toks = tokenRows(docs, d.analyzer)
-        toks.unionByName(statsRow(spark, n, sdl))
-          .unionByName(dictRows(toks))
+          .unionByName(SearchIndexes.ftMarkerRows(spark))
     }
     if (mustRebuild || srcDirty.isEmpty) return (fullView, None)
     val keys = srcDirty.get
@@ -1720,68 +1679,27 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
           .select(pxSchema.fieldNames.map(col).toSeq: _*)
         (view, Some(dk))
       case _ =>
-        import org.apache.spark.sql.functions.{aggregate => fagg,
-          count => fcount, count_distinct => fcountd, filter => ffilter,
-          max => fmax, size => fsize, sum => fsum, transform => ftransform}
-        // a table built BEFORE per-field postings existed must not
-        // grow mixed-shape rows (the delta's removed rows must be
-        // byte-equal to the STORED shape): per-field delta only when
-        // the previous manifest carries the sect=f marker. Legacy
-        // tables stay concatenated — and field-scoped leaves keep the
-        // stored-text verification — until a full rebuild.
-        // the STORED shape decides the delta shape: a sect=f-marked
-        // table must get per-field delta rows (the removed rows must
-        // be byte-equal to what was stored) regardless of the
-        // positionsEnabled test hook -- flipping the hook off against
-        // a field-built table would write legacy-shape rows under the
-        // persisting marker and field-scoped leaves would silently
-        // miss the updated docs, so that combination fails fast
-        val hadFields = prevIdx.keys.exists(_.startsWith("sect=f"))
-        require(!hadFields || SearchIndexes.positionsEnabled,
-          s"fulltext index ${d.name}: table $tbl was built with " +
-            "per-field postings (sect=f) but positionsEnabled is " +
-            "false; rebuild the index before disabling positions")
+        import org.apache.spark.sql.functions.{count => fcount,
+          count_distinct => fcountd, max => fmax, sum => fsum}
         // changed docs appear on both sides; deterministic
         // tokenization makes the removed rows byte-equal to the old
         // stored rows, so every stale row lives in a dirty bucket.
-        // Per-field tables detect change on the field ARRAY (two
-        // field splits can concatenate identically).
-        val (removedDocs, addedDocs, remT, addT) =
-          if (hadFields) {
-            val oldD = fieldDocsOf(changedOldNodes)
-            val newD = fieldDocsOf(changedNewNodes)
-            val rem = oldD.join(newD, Seq("gid", "fs"), "left_anti")
-              .localCheckpoint()
-            val add = newD.join(oldD, Seq("gid", "fs"), "left_anti")
-              .localCheckpoint()
-            (rem, add,
-              SearchIndexes.tokenRowsF(rem, d.properties, d.analyzer),
-              SearchIndexes.tokenRowsF(add, d.properties, d.analyzer))
-          } else {
-            val oldD = docsOf(changedOldNodes)
-            val newD = docsOf(changedNewNodes)
-            val rem = oldD.join(newD, Seq("gid", "text"), "left_anti")
-              .localCheckpoint()
-            val add = newD.join(oldD, Seq("gid", "text"), "left_anti")
-              .localCheckpoint()
-            (rem, add, tokenRows(rem, d.analyzer),
-              tokenRows(add, d.analyzer))
-          }
+        // Change is detected on the field ARRAY (two field splits can
+        // concatenate identically).
+        val oldD = fieldDocsOf(changedOldNodes)
+        val newD = fieldDocsOf(changedNewNodes)
+        val removedDocs = oldD.join(newD, Seq("gid", "fs"), "left_anti")
+          .localCheckpoint()
+        val addedDocs = newD.join(oldD, Seq("gid", "fs"), "left_anti")
+          .localCheckpoint()
+        val remT =
+          SearchIndexes.tokenRowsF(removedDocs, d.properties, d.analyzer)
+        val addT =
+          SearchIndexes.tokenRowsF(addedDocs, d.properties, d.analyzer)
         val termBuckets = remT.unionByName(addT)
           .select(pmod(hash(col("term")), lit(bc)).as("b"))
           .distinct().collect().map(_.getInt(0)).toSeq
         if (termBuckets.isEmpty) return (empty, Some(Set.empty))
-        def docStats(docs: DataFrame): (Long, Long) = {
-          val tokens =
-            if (hadFields)
-              fagg(ftransform(col("fs"), f =>
-                fsize(ffilter(termsOf(f, d.analyzer),
-                  t => t =!= "")).cast("long")),
-                lit(0L), (a, x) => a + x)
-            else fsize(termsOf(col("text"), d.analyzer)).cast("long")
-          val r = docs.agg(fcount(lit(1)), fsum(tokens).cast("long")).head()
-          (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-        }
         val (remN, remDl) = docStats(removedDocs)
         val (addN, addDl) = docStats(addedDocs)
         val statsKey: Set[DirtyKey] = Set((Some("s"), None))
@@ -1792,19 +1710,10 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
         val (n0, dl0) = oldStats
           .filter(col("gid") === "__stats").collect().headOption
           .map(r => (r.getLong(3), r.getLong(4))).getOrElse((0L, 0L))
-        // a table built BEFORE the dictionary section existed must
-        // not grow a partial one (prefix queries would silently miss
-        // pre-existing terms): maintain the dict only when the
-        // previous manifest carries it, or the table was empty (a
-        // fresh dict is complete by construction). Older tables stay
-        // dict-less — and prefix-unpruned — until a full rebuild.
-        val hadDict = prevIdx.isEmpty ||
-          prevIdx.keys.exists(_.startsWith("sect=d"))
-        val dk: Set[DirtyKey] = termBuckets
-          .map(b => (Some("t"): Option[String], Some(b): Option[Int]))
-          .toSet ++ (if (hadDict) termBuckets
-            .map(b => (Some("d"): Option[String], Some(b): Option[Int]))
-            .toSet else Set.empty[DirtyKey]) ++ statsKey
+        val dk: Set[DirtyKey] = Seq("t", "d").flatMap(sect =>
+          termBuckets.map(b =>
+            (Some(sect): Option[String], Some(b): Option[Int])))
+          .toSet ++ statsKey
         val oldPruned = readFiles(tbl,
           prevIdx.view.filterKeys(keyMatches("sect", dk)).values
             .flatten.toSeq, ftSchema)
@@ -1817,8 +1726,7 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
         // df' = df - removedDocsWithTerm + addedDocsWithTerm, rows
         // reaching zero leave the dictionary. df counts DOCS: in a
         // per-field frame a doc may carry the term in several rows,
-        // so the adjustment counts distinct gids (== rows for the
-        // legacy one-row-per-doc shape).
+        // so the adjustment counts distinct gids.
         val oldDict = oldPruned.filter(col("sect") === "d")
           .select(col("term"), col("tf"))
         val remDf = remT.groupBy(col("term"))
@@ -1839,45 +1747,41 @@ class GraphStore(val root: String, spark: SparkSession, numBuckets: Int = 8) {
             lit(null).cast(StringType).as("fld"),
             lit(null).cast(LongType).as("off"),
             lit(null).cast(LongType).as("dlt"))
-        val view0 = keepToks
+        // per-field collection statistics ride the same rewritten
+        // sect=s directory: docCount'/Σdl' = old − removed + added,
+        // fields reaching zero docs leave the section
+        def fstats(toks: DataFrame, nc: String, sc: String) = toks
+          .groupBy(col("fld"), col("gid"))
+          .agg(fmax(col("dl")).as("fdl"))
+          .groupBy(col("fld"))
+          .agg(fcount(lit(1)).as(nc), fsum(col("fdl")).as(sc))
+        val oldF = oldStats
+          .filter(col("gid").startsWith("__stats:"))
+          .select(col("fld"), col("tf").as("n1"), col("dl").as("s1"))
+        val fView = oldF
+          .join(fstats(remT, "rn", "rs"), Seq("fld"), "full_outer")
+          .join(fstats(addT, "an", "as"), Seq("fld"), "full_outer")
+          .select(col("fld"),
+            (coalesce(col("n1"), lit(0L)) - coalesce(col("rn"), lit(0L))
+              + coalesce(col("an"), lit(0L))).as("nd"),
+            (coalesce(col("s1"), lit(0L)) - coalesce(col("rs"), lit(0L))
+              + coalesce(col("as"), lit(0L))).as("sdl"))
+          .filter(col("nd") > 0)
+          .select(lit("s").as("sect"), lit("").as("term"),
+            org.apache.spark.sql.functions.concat(
+              lit("__stats:"), col("fld")).as("gid"),
+            col("nd").as("tf"), col("sdl").as("dl"),
+            lit(null).cast(org.apache.spark.sql.types.ArrayType(
+              org.apache.spark.sql.types.IntegerType)).as("pos"),
+            col("fld"), lit(null).cast(LongType).as("off"),
+            lit(null).cast(LongType).as("dlt"))
+        val view = keepToks
           .select(ftSchema.fieldNames.map(col).toSeq: _*)
           .unionByName(addT)
           .unionByName(
             statsRow(spark, n0 - remN + addN, dl0 - remDl + addDl))
-        // per-field collection statistics ride the same rewritten
-        // sect=s directory: docCount'/Σdl' = old − removed + added,
-        // fields reaching zero docs leave the section
-        val viewF =
-          if (!hadFields) view0
-          else {
-            def fstats(toks: DataFrame, nc: String, sc: String) = toks
-              .groupBy(col("fld"), col("gid"))
-              .agg(fmax(col("dl")).as("fdl"))
-              .groupBy(col("fld"))
-              .agg(fcount(lit(1)).as(nc), fsum(col("fdl")).as(sc))
-            val oldF = oldStats
-              .filter(col("gid").startsWith("__stats:"))
-              .select(col("fld"), col("tf").as("n1"), col("dl").as("s1"))
-            val fView = oldF
-              .join(fstats(remT, "rn", "rs"), Seq("fld"), "full_outer")
-              .join(fstats(addT, "an", "as"), Seq("fld"), "full_outer")
-              .select(col("fld"),
-                (coalesce(col("n1"), lit(0L)) - coalesce(col("rn"), lit(0L))
-                  + coalesce(col("an"), lit(0L))).as("nd"),
-                (coalesce(col("s1"), lit(0L)) - coalesce(col("rs"), lit(0L))
-                  + coalesce(col("as"), lit(0L))).as("sdl"))
-              .filter(col("nd") > 0)
-              .select(lit("s").as("sect"), lit("").as("term"),
-                org.apache.spark.sql.functions.concat(
-                  lit("__stats:"), col("fld")).as("gid"),
-                col("nd").as("tf"), col("sdl").as("dl"),
-                lit(null).cast(org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.IntegerType)).as("pos"),
-                col("fld"), lit(null).cast(LongType).as("off"),
-                lit(null).cast(LongType).as("dlt"))
-            view0.unionByName(fView)
-          }
-        val view = if (hadDict) viewF.unionByName(dictView) else viewF
+          .unionByName(fView)
+          .unionByName(dictView)
         (view, Some(dk))
     }
   }

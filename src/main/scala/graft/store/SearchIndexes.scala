@@ -254,15 +254,14 @@ object SearchIndexes {
     * statistics, what BM25F scoring needs). `pos` carries the term's
     * 0-based token positions within the doc (Lucene's positional
     * postings) — phrase and slop queries verify on it instead of
-    * re-reading stored text; tables built before the column existed
-    * read it back null and keep the text fallback.
+    * re-reading stored text.
     *
     * Per-field token rows (the `sect=f` marker asserts them): one row
     * per (fld, term, gid) with the FIELD's own tf/dl and field-LOCAL
     * positions; `off` is the field's token offset within the
     * concatenated document and `dlt` the total document length, so
-    * the legacy concatenated view (unscoped scoring, cross-field
-    * phrases) reconstructs bit-exactly by aggregation —
+    * the concatenated view (unscoped scoring, cross-field phrases)
+    * reconstructs bit-exactly by aggregation —
     * tf_cat = Σ tf_fld, dl_cat = dlt, pos_cat = ∪ (pos_fld + off) —
     * while field-scoped leaves (`title:spark`) score per-field BM25
     * straight off the rows, no stored-text verification. */
@@ -276,11 +275,6 @@ object SearchIndexes {
     StructField("fld", StringType),
     StructField("off", LongType),
     StructField("dlt", LongType)))
-
-  /** test hook: build posting rows WITHOUT positions (simulates a
-    * table written before the positional column existed, exercising
-    * the stored-text fallback); production always stores positions */
-  @volatile private[graft] var positionsEnabled: Boolean = true
 
   /** property-value index row (`CREATE INDEX … FOR (n:L) ON (n.p)`):
     * one row per (node, scalar value), laid out as
@@ -312,30 +306,13 @@ object SearchIndexes {
       .withColumn("norm", sqrt(dot(col("v"), col("v"))))
   }
 
-  /** `(gid, text)` of every live node of the def's label carrying at
-    * least one indexed property as a non-empty string; a
-    * multi-property index concatenates the fields with single spaces
-    * (tokenization is whitespace-split, so field boundaries stay
-    * token boundaries). */
-  def texts(nodes: DataFrame, d: IndexDef): DataFrame = {
-    val parts = d.properties.map(p =>
-      col("props").getItem(p).getField("s"))
-    val txt =
-      if (parts.size == 1) parts.head
-      else concat_ws(" ", parts.map(p => trim(coalesce(p, lit("")))): _*)
-    nodes
-      .filter(labelMember(d.label) &&
-        parts.map(_.isNotNull).reduce(_ || _) && length(trim(txt)) > 0)
-      .select(col("gid"), txt.as("text"))
-  }
-
-  /** PER-FIELD twin of [[texts]]: `(gid, fs)` where `fs` holds each
-    * indexed property's string (in [[IndexDef.properties]] order,
-    * absent → ""), keeping EXACTLY texts()'s document-membership
-    * filter — the same docs, field-resolved. Change detection joins
-    * on the field ARRAY, not the concatenation: two different field
-    * splits can concatenate identically ("a b"+"c" vs "a"+"b c"),
-    * and a per-field index must see that edit. */
+  /** `(gid, fs)` of every live node of the def's label carrying at
+    * least one indexed property as a non-empty string: `fs` holds
+    * each indexed property's string (in [[IndexDef.properties]]
+    * order, absent → ""). Change detection joins on the field ARRAY,
+    * not the concatenation: two different field splits can
+    * concatenate identically ("a b"+"c" vs "a"+"b c"), and a
+    * per-field index must see that edit. */
   def fieldDocs(nodes: DataFrame, d: IndexDef): DataFrame = {
     val parts = d.properties.map(p =>
       col("props").getItem(p).getField("s"))
@@ -762,21 +739,17 @@ object SearchIndexes {
     * table on the recomputed composite, so it is never parsed back */
   val EdgeGidSep = "\u0001"
 
-  /** `(gid, text)` of every edge of a RELATIONSHIP def's relType
-    * carrying a non-empty `source` — the relationship-index document
-    * extraction (the edge-table twin of [[texts]]) */
-  def edgeTexts(edges: DataFrame, d: IndexDef): DataFrame =
+  /** `(gid, fs)` of every edge of a RELATIONSHIP def's relType
+    * carrying a non-empty `source` — the edge-table twin of
+    * [[fieldDocs]]: the edge document's single indexable field is
+    * `source`, resolved as a one-slot array so the per-field
+    * build/delta machinery is shared with node indexes */
+  def edgeFieldDocs(edges: DataFrame, d: IndexDef): DataFrame =
     edges
       .filter(col("relType") === d.label && col("source").isNotNull &&
         length(trim(col("source"))) > 0)
       .select(concat_ws(EdgeGidSep, col("src"), col("relType"),
-        col("dst")).as("gid"), col("source").as("text"))
-
-  /** PER-FIELD twin of [[edgeTexts]] — the edge document's single
-    * indexable field is `source`, resolved as a one-slot array so the
-    * per-field build/delta machinery is shared with node indexes */
-  def edgeFieldDocs(edges: DataFrame, d: IndexDef): DataFrame =
-    edgeTexts(edges, d).select(col("gid"), array(col("text")).as("fs"))
+        col("dst")).as("gid"), array(col("source")).as("fs"))
 
   /** analyzer names — Neo4j's default and the legacy/explicit
     * whitespace analyzer */
@@ -812,18 +785,18 @@ object SearchIndexes {
   def normalizeTerm(t: String, analyzer: String): String =
     if (analyzer == StandardAnalyzer) t.toLowerCase else t
 
-  /** the legacy-shape ft columns a per-field-unaware frame lacks */
-  private def ftLegacyPad: Seq[Column] = Seq(
+  /** the per-field ft columns, null in a frame without fields */
+  private def ftNoFieldPad: Seq[Column] = Seq(
     lit(null).cast(StringType).as("fld"),
     lit(null).cast(LongType).as("off"),
     lit(null).cast(LongType).as("dlt"))
 
   /** token rows `(sect="t", term, gid, tf, dl, pos)` of `(gid, text)`
     * docs — `pos` holds the term's 0-based positions in analysis
-    * order (sorted; tf == size(pos) by construction). The LEGACY
-    * (concatenated-document) shape: fld/off/dlt ride null; index
-    * builds use [[tokenRowsF]], this stays the pinned kernel of the
-    * streaming twin and pre-field tables' delta maintenance. */
+    * order (sorted; tf == size(pos) by construction). The
+    * concatenated-document shape: fld/off/dlt ride null. Index tables
+    * hold [[tokenRowsF]] rows; this is the pinned kernel of the
+    * streaming twin. */
   def tokenRows(docs: DataFrame,
       analyzer: String = WhitespaceAnalyzer): DataFrame =
     docs
@@ -835,10 +808,8 @@ object SearchIndexes {
       .agg(count(lit(1)).as("tf"),
         sort_array(collect_list(col("p"))).as("pos0"))
       .select((Seq(lit("t").as("sect"), col("term"), col("gid"),
-        col("tf"), col("dl"),
-        (if (positionsEnabled) col("pos0")
-         else lit(null).cast(ArrayType(IntegerType))).as("pos"))
-        ++ ftLegacyPad): _*)
+        col("tf"), col("dl"), col("pos0").as("pos"))
+        ++ ftNoFieldPad): _*)
 
   /** PER-FIELD token rows of `(gid, fs)` docs (`fs` = one slot per
     * indexed field, in [[IndexDef.properties]] order): one row per
@@ -876,11 +847,17 @@ object SearchIndexes {
       .agg(count(lit(1)).as("tf"),
         sort_array(collect_list(col("p"))).as("pos0"))
       .select(lit("t").as("sect"), col("term"), col("gid"),
-        col("tf"), col("dl"),
-        (if (positionsEnabled) col("pos0")
-         else lit(null).cast(ArrayType(IntegerType))).as("pos"),
+        col("tf"), col("dl"), col("pos0").as("pos"),
         col("fld"), col("off"), col("dlt"))
   }
+
+  /** a `(gid, fs)` doc's length: its clean token count over every
+    * field — the Σ dlt the global stats row tallies */
+  def docLength(fs: Column, analyzer: String): Column =
+    aggregate(
+      transform(fs, f =>
+        size(filter(termsOf(f, analyzer), t => t =!= "")).cast("long")),
+      lit(0L), (a, x) => a + x)
 
   /** term-dictionary rows `(sect="d", term, gid="", tf=df, dl=0)` of
     * a token-row frame — one row per DISTINCT term, `tf` carrying the
@@ -898,7 +875,7 @@ object SearchIndexes {
       .select((Seq(lit("d").as("sect"), col("term"), lit("").as("gid"),
         col("df").as("tf"), lit(0L).as("dl"),
         lit(null).cast(ArrayType(IntegerType)).as("pos"))
-        ++ ftLegacyPad): _*)
+        ++ ftNoFieldPad): _*)
 
   /** one stats row from (nDocs, sumDl) */
   def statsRow(spark: SparkSession, nDocs: Long, sumDl: Long): DataFrame =
@@ -924,29 +901,25 @@ object SearchIndexes {
         col("fld"), lit(null).cast(LongType).as("off"),
         lit(null).cast(LongType).as("dlt"))
 
-  /** single `sect=q` marker row: its presence in a posting table's
-    * manifest asserts EVERY token row carries positions — only full
-    * builds by position-aware code write it (deltas carry it
-    * forward), which is what lets phrase/slop run as pure index reads
-    * with zero stored-text access */
-  def posMarkerRow(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      java.util.Arrays.asList(
-        Row("q", "", "__pos", 1L, 0L, null, null, null, null)),
-      ftSchema)
-
-  /** single `sect=f` marker row: asserts every token row is
-    * PER-FIELD (fld/off/dlt populated, positions field-local) and the
-    * stats section carries per-field rows — what lets field-scoped
-    * leaves score true per-field BM25F and verify membership straight
-    * off the index. Written by full builds only (deltas carry it
-    * forward); tables built before it keep the concatenated shape
-    * and the stored-text field verification. */
-  def fieldsMarkerRow(spark: SparkSession): DataFrame =
+  /** the `sect=f` marker row every full build writes (deltas carry
+    * it forward). It asserts the one table shape graft maintains and
+    * plans against: every token row is PER-FIELD (fld/off/dlt
+    * populated, positions field-local, the stats section carrying
+    * per-field rows beside the global one) and carries its positions
+    * (phrase and slop run as pure index reads). Tables written by
+    * older code may also hold a `sect=q` row; no reader looks at it. */
+  def ftMarkerRows(spark: SparkSession): DataFrame =
     spark.createDataFrame(
       java.util.Arrays.asList(
         Row("f", "", "__fields", 1L, 0L, null, null, null, null)),
       ftSchema)
+
+  /** do a fulltext table's manifest keys carry the `sect=f` marker? A
+    * table without it (written by older code, or never built) is not
+    * ready: procedures take the unindexed path, and the next commit
+    * rebuilds it in full. */
+  def ftMarked(keys: Iterable[String]): Boolean =
+    keys.exists(_.startsWith("sect=f"))
 
   /** a local DataFrame of the trained centroids `(cid, cv, cn)` */
   def centroidDf(spark: SparkSession, cents: Seq[Seq[Double]]): DataFrame = {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,7 +19,7 @@ class CountStoreSpec extends AnyFunSuite {
 
   private def newStore(tag: String): GraphStore =
     new GraphStore(
-      Files.createTempDirectory(s"graft-cnt-$tag").toString, spark, 4)
+      Memo.tempDir(s"graft-cnt-$tag"), spark, 4)
 
   private def one(st: GraphStore, q: String): Long =
     CypherEngine.query(st, q).collect().head.getLong(0)

@@ -21,7 +21,7 @@ class CypherSpec extends AnyFunSuite {
 
   private lazy val store: GraphStore = {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-cypher").toString, spark, 2)
+      Memo.tempDir("graft-cypher"), spark, 2)
     val people = new GraphDataset(st, spark, "people", "Person")
     people.fullSync(Seq(
       Entity("urn:p1").withProp("urn:x#name", "brian")
@@ -129,7 +129,7 @@ class CypherSpec extends AnyFunSuite {
 
   test("quantified path patterns desugar to var-length hops") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-qpp").toString, spark, 2)
+      Memo.tempDir("graft-qpp"), spark, 2)
     new GraphDataset(st, spark, "people", "Person").fullSync(Seq(
       Entity("urn:a").withProp("urn:x#name", "ann")
         .withRef("urn:x#knows", "urn:b"),
@@ -160,7 +160,7 @@ class CypherSpec extends AnyFunSuite {
 
   test("quantified path patterns bind GQL group variables") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-qppg").toString, spark, 2)
+      Memo.tempDir("graft-qppg"), spark, 2)
     new GraphDataset(st, spark, "people", "Person").fullSync(Seq(
       Entity("urn:a").withProp("urn:x#name", "ann")
         .withRef("urn:x#knows", "urn:b"),
@@ -375,7 +375,7 @@ class CypherSpec extends AnyFunSuite {
 
   test("CREATE/MERGE/SET … RETURN projects post-write values") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-wret").toString, spark, 2)
+      Memo.tempDir("graft-wret"), spark, 2)
     // CREATE … RETURN the created binding
     val created = CypherEngine.query(st,
       "CREATE (n:Thing {gid: 't:1', name: 'one'}) RETURN n.gid AS gid, n.name AS name")
@@ -400,7 +400,7 @@ class CypherSpec extends AnyFunSuite {
 
   test("chain MERGE: whole-pattern match vs create-the-missing") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-wpmerge").toString, spark, 2)
+      Memo.tempDir("graft-wpmerge"), spark, 2)
     CypherEngine.query(st,
       "CREATE (:X {gid: 'x', keep: 'original'})").collect()
     val v0 = st.currentVersion
@@ -444,7 +444,7 @@ class CypherSpec extends AnyFunSuite {
 
   test("MERGE ON CREATE SET / ON MATCH SET hit only their rows") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-onmerge").toString, spark, 2)
+      Memo.tempDir("graft-onmerge"), spark, 2)
     CypherEngine.query(st,
       "CREATE (n:Acc {gid: 'a:1', name: 'old'})").collect()
     // one existing (a:1) + one new (a:2) through the same template
@@ -640,7 +640,7 @@ class CypherSpec extends AnyFunSuite {
 
   test("FOREACH: per-element writes and the conditional-write idiom") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-foreach").toString, spark, 2)
+      Memo.tempDir("graft-foreach"), spark, 2)
     // per-element CREATE from a literal item list
     CypherEngine.query(st,
       """FOREACH (x IN [{gid: 'f:1'}, {gid: 'f:2'}] |
@@ -664,7 +664,7 @@ class CypherSpec extends AnyFunSuite {
 
   test("CALL { } IN TRANSACTIONS: batched commits, read-your-writes") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-intx").toString, spark, 2)
+      Memo.tempDir("graft-intx"), spark, 2)
     // ingest: 5 driving rows, batches of 2 → 3 commits, 5 nodes
     CypherEngine.query(st,
       """UNWIND range(1, 5) AS k
@@ -717,7 +717,7 @@ class CypherSpec extends AnyFunSuite {
 
   test("IN CONCURRENT TRANSACTIONS: accepted, serialized semantics") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-conctx").toString, spark, 2)
+      Memo.tempDir("graft-conctx"), spark, 2)
     // all three concurrent spellings run the serial per-batch loop
     CypherEngine.query(st,
       """UNWIND range(1, 4) AS k
@@ -975,7 +975,7 @@ class CypherSpec extends AnyFunSuite {
   test("multi-label: CREATE (n:A:B), conjunctive MATCH, labels(), " +
       "SET/REMOVE label editing") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-mlab").toString, spark, 2)
+      Memo.tempDir("graft-mlab"), spark, 2)
     CypherEngine.query(st,
       """CREATE (a:Person:Admin {gid: 'urn:a', name: 'amy'}),
                (b:Person {gid: 'urn:b', name: 'bob'})""").collect()
@@ -1023,7 +1023,7 @@ class CypherSpec extends AnyFunSuite {
 
   test("n:Label predicate in WHERE and RETURN (expression position)") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-lpred").toString, spark, 2)
+      Memo.tempDir("graft-lpred"), spark, 2)
     CypherEngine.query(st,
       """CREATE (a:Person:Admin {gid: 'urn:a', name: 'amy'}),
                (b:Person {gid: 'urn:b', name: 'bob'})""").collect()
@@ -1173,7 +1173,7 @@ class CypherSpec extends AnyFunSuite {
     // separator collides: ("urn:x|", "y") and ("urn:x", "|y") — the
     //  edge-key separator must keep them apart
     val st = new GraphStore(
-      Files.createTempDirectory("graft-pipe").toString, spark, 2)
+      Memo.tempDir("graft-pipe"), spark, 2)
     val ds = new GraphDataset(st, spark, "pipes", "P")
     ds.fullSync(Seq(
       Entity("urn:x|").withRef("urn:r#t", "y"),
@@ -1258,7 +1258,7 @@ class CypherSpec extends AnyFunSuite {
 
   test("ORDER BY a dynamic property sorts numerically, not lexically") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-ord").toString, spark, 2)
+      Memo.tempDir("graft-ord"), spark, 2)
     new GraphDataset(st, spark, "ord", "P").fullSync(Seq(
       Entity("urn:o1").withProp("urn:x#age", 9),
       Entity("urn:o2").withProp("urn:x#age", 40),
@@ -1312,6 +1312,21 @@ class CypherSpec extends AnyFunSuite {
            UNION MATCH (c:Company) RETURN c.gid AS gid""")
     }
     assert(err.getMessage.contains("same columns"))
+    // the same name set in another order aligns by name, in the first
+    // part's order — at top level and inside a correlated CALL union
+    val byName = CypherEngine.query(store,
+      "RETURN 1 AS a, 2 AS b UNION RETURN 4 AS b, 3 AS a")
+    assert(byName.columns.toSeq == Seq("a", "b"))
+    assert(byName.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((1L, 2L), (3L, 4L)))
+    val call = CypherEngine.query(store,
+      """MATCH (n:Person) WHERE n.source = 'people'
+         CALL { WITH n RETURN 1 AS a, n.gid AS b
+                UNION WITH n RETURN n.gid AS b, 2 AS a }
+         RETURN b, a ORDER BY b, a""").collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+    assert(call.toSeq == Seq(("urn:p1", 1L), ("urn:p1", 2L),
+      ("urn:p2", 1L), ("urn:p2", 2L), ("urn:p3", 1L), ("urn:p3", 2L)))
   }
 
   test("undirected relationships match either orientation") {
@@ -1496,7 +1511,7 @@ class CypherSpec extends AnyFunSuite {
     // "40" coincides, so use a 9 to force divergence
     val st2 = {
       val s = new GraphStore(
-        Files.createTempDirectory("graft-cy2").toString, spark, 2)
+        Memo.tempDir("graft-cy2"), spark, 2)
       new GraphDataset(s, spark, "people", "Person").fullSync(Seq(
         Entity("urn:a").withProp("urn:x#age", 9),
         Entity("urn:b").withProp("urn:x#age", 40)))
@@ -1603,7 +1618,7 @@ class CypherSpec extends AnyFunSuite {
     */
   private def mutableStore(): GraphStore = {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-cypher-del").toString, spark, 2)
+      Memo.tempDir("graft-cypher-del"), spark, 2)
     new GraphDataset(st, spark, "people", "Person").fullSync(Seq(
       Entity("urn:p1").withProp("urn:x#name", "brian")
         .withRef("urn:x#worksfor", "urn:c1"),
@@ -1666,7 +1681,7 @@ class CypherSpec extends AnyFunSuite {
     // 6 rows for *1..3 (and diverge as maxH grows); Cypher paths may
     // not reuse a relationship: exactly 4.
     val st = new GraphStore(
-      Files.createTempDirectory("graft-cycle").toString, spark, 2)
+      Memo.tempDir("graft-cycle"), spark, 2)
     new GraphDataset(st, spark, "people", "Person").fullSync(Seq(
       Entity("urn:a").withRef("urn:x#knows", "urn:b"),
       Entity("urn:b").withRef("urn:x#knows", "urn:a")))
@@ -1681,7 +1696,7 @@ class CypherSpec extends AnyFunSuite {
   test("var-length diamond fan-out keeps one row per distinct path") {
     // a → b1 → c and a → b2 → c: two edge-disjoint 2-hop paths → 2 rows
     val st = new GraphStore(
-      Files.createTempDirectory("graft-diamond").toString, spark, 2)
+      Memo.tempDir("graft-diamond"), spark, 2)
     new GraphDataset(st, spark, "people", "Person").fullSync(Seq(
       Entity("urn:a").withRef("urn:x#knows", "urn:b1")
         .withRef("urn:x#likes", "urn:b2"),
@@ -1698,7 +1713,7 @@ class CypherSpec extends AnyFunSuite {
     // a→b→c→d chain PLUS a direct a→d shortcut: plain *1..3 finds both
     // the 3-hop and the 1-hop a⇝d; shortestPath keeps only the 1-hop
     val st = new GraphStore(
-      Files.createTempDirectory("graft-sp").toString, spark, 2)
+      Memo.tempDir("graft-sp"), spark, 2)
     new GraphDataset(st, spark, "people", "Person").fullSync(Seq(
       Entity("urn:a").withRefs("urn:x#knows", Seq("urn:b", "urn:d")),
       Entity("urn:b").withRef("urn:x#knows", "urn:c"),
@@ -1737,7 +1752,7 @@ class CypherSpec extends AnyFunSuite {
     // shortestPath keeps ONE row for (x,z); allShortestPaths keeps both
     // 2-hop paths and drops the 3-hop
     val st = new GraphStore(
-      Files.createTempDirectory("graft-asp").toString, spark, 2)
+      Memo.tempDir("graft-asp"), spark, 2)
     new GraphDataset(st, spark, "people", "Person").fullSync(Seq(
       Entity("urn:x").withRefs("urn:r#knows", Seq("urn:p", "urn:q")),
       Entity("urn:p").withRefs("urn:r#knows", Seq("urn:z", "urn:q")),
@@ -1761,7 +1776,7 @@ class CypherSpec extends AnyFunSuite {
     // complete digraph MINUS the k0→k1 edge, so one pair sits at
     // distance 2 with four distinct minimal routes
     val st = new GraphStore(
-      Files.createTempDirectory("graft-bfs").toString, spark, 2)
+      Memo.tempDir("graft-bfs"), spark, 2)
     val ids = (0 until 6).map(i => s"urn:k$i")
     new GraphDataset(st, spark, "people", "Person").fullSync(
       ids.map(i => Entity(i).withRefs("urn:x#knows",
@@ -1797,7 +1812,7 @@ class CypherSpec extends AnyFunSuite {
     // a→b→c→d chain plus a direct a→d shortcut (the shortestPath
     // fixture shape)
     val st = new GraphStore(
-      Files.createTempDirectory("graft-pathfn").toString, spark, 2)
+      Memo.tempDir("graft-pathfn"), spark, 2)
     new GraphDataset(st, spark, "people", "Person").fullSync(Seq(
       Entity("urn:a").withRefs("urn:x#knows", Seq("urn:b", "urn:d")),
       Entity("urn:b").withRef("urn:x#knows", "urn:c"),
@@ -1835,7 +1850,7 @@ class CypherSpec extends AnyFunSuite {
 
   test("lambdas over nodes(p): identity folds and property reads") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-pathprop").toString, spark, 2)
+      Memo.tempDir("graft-pathprop"), spark, 2)
     new GraphDataset(st, spark, "people", "Person").fullSync(Seq(
       Entity("urn:a").withProp("urn:x#name", "ann")
         .withRef("urn:x#knows", "urn:b"),
@@ -1904,7 +1919,7 @@ class CypherSpec extends AnyFunSuite {
 
   test("CREATE writes nodes, edges and stubs through Cypher text") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-create").toString, spark, 2)
+      Memo.tempDir("graft-create"), spark, 2)
     val r = CypherEngine.query(st,
       """CREATE (a:Person {gid: 'urn:n1', name: 'ann', age: 30})
                -[:knows]->(b:Person {gid: 'urn:n2', name: 'ben'})""").collect()
@@ -1951,7 +1966,7 @@ class CypherSpec extends AnyFunSuite {
     // not case-mangle them when they appear as names (caught by the
     // customer/order scale smoke: (o:Order) silently matched nothing)
     val st = new GraphStore(
-      Files.createTempDirectory("graft-kw").toString, spark, 2)
+      Memo.tempDir("graft-kw"), spark, 2)
     CypherEngine.query(st,
       """CREATE (a:Order {gid: 'ord:1', count: 3})
                -[:Set]->(b:Order {gid: 'ord:2'})""").collect()
@@ -2421,9 +2436,9 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
   test("the reference's write templates (neo4j.go:95-127) run verbatim " +
       "and match the native applyBatch state") {
     val native = new GraphStore(
-      Files.createTempDirectory("graft-tpl-native").toString, spark, 2)
+      Memo.tempDir("graft-tpl-native"), spark, 2)
     val viaText = new GraphStore(
-      Files.createTempDirectory("graft-tpl-text").toString, spark, 2)
+      Memo.tempDir("graft-tpl-text"), spark, 2)
     val batch1 = Seq(
       Entity("urn:p1").withProp("urn:x#name", "brian")
         .withProp("urn:x#age", 23)
@@ -2533,7 +2548,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
   test("a session batches statements into ONE commit and later " +
       "statements read earlier uncommitted writes") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-sess").toString, spark, 2)
+      Memo.tempDir("graft-sess"), spark, 2)
     val v0 = st.currentVersion
     val sess = CypherEngine.session(st)
     sess.run("CREATE (a:P {gid: 'urn:a', name: 'ann'})").collect()
@@ -2560,7 +2575,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
 
   test("session abort discards every statement") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-sess-abort").toString, spark, 2)
+      Memo.tempDir("graft-sess-abort"), spark, 2)
     val sess = CypherEngine.session(st)
     sess.run("CREATE (a:P {gid: 'urn:x'})").collect()
     sess.abort()
@@ -2622,7 +2637,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
 
   test("inline relationship property maps in MATCH and CREATE") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-relprops").toString, spark, 2)
+      Memo.tempDir("graft-relprops"), spark, 2)
     val ds = new GraphDataset(st, spark, "people", "Person")
     ds.fullSync(Seq(
       Entity("urn:a").withRef("urn:x#knows", "urn:b"),
@@ -2655,7 +2670,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
 
   test("relationship MERGE with ON CREATE / ON MATCH SET") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-relmerge").toString, spark, 2)
+      Memo.tempDir("graft-relmerge"), spark, 2)
     val ds = new GraphDataset(st, spark, "people", "Person")
     ds.fullSync(Seq(
       Entity("urn:a").withProp("urn:x#name", "a")
@@ -2691,7 +2706,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
 
   test("CALL db.schema.nodeTypeProperties / relTypeProperties / dbms.procedures") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-schema").toString, spark, 2)
+      Memo.tempDir("graft-schema"), spark, 2)
     new GraphDataset(st, spark, "people", "Person").fullSync(Seq(
       Entity("urn:a").withProp("urn:x#name", "a")
         .withProp("urn:x#age", 30L)
@@ -2724,7 +2739,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
 
   test("CALL db.labels / db.relationshipTypes / db.propertyKeys") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-proc").toString, spark, 2)
+      Memo.tempDir("graft-proc"), spark, 2)
     val ds = new GraphDataset(st, spark, "people", "Person")
     ds.fullSync(Seq(
       Entity("urn:a").withProp("urn:x#name", "a")
@@ -2778,7 +2793,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
 
   test("CALL graft.pageRank / degrees / connectedComponents") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-gds").toString, spark, 2)
+      Memo.tempDir("graft-gds"), spark, 2)
     val ds = new GraphDataset(st, spark, "people", "Person")
     // a -> b -> c chain plus isolated d
     ds.fullSync(Seq(
@@ -2827,7 +2842,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
 
   test("whole-pattern relationship MERGE with unbound endpoints") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-pattmerge").toString, spark, 2)
+      Memo.tempDir("graft-pattmerge"), spark, 2)
     val ds = new GraphDataset(st, spark, "people", "Person")
     ds.fullSync(Seq(
       Entity("urn:a").withProp("urn:x#name", "a")
@@ -2965,7 +2980,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
   }
 
   test("LOAD CSV: headers map, headerless array, FIELDTERMINATOR, writes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv")
+    val dir = java.nio.file.Paths.get(Memo.tempDir("graft-csv"))
     val f1 = dir.resolve("people.csv")
     java.nio.file.Files.writeString(f1,
       "gid,name,age\nurn:l1,ada,36\nurn:l2,grace,45\n")
@@ -2985,7 +3000,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
     assert(bare.toSeq == Seq(("x", "1"), ("y", "2")))
     // the bulk-ingest idiom: LOAD CSV feeding MERGE + SET
     val wstore = new GraphStore(
-      Files.createTempDirectory("graft-csvw").toString, spark, 2)
+      Memo.tempDir("graft-csvw"), spark, 2)
     CypherEngine.query(wstore,
       s"""LOAD CSV WITH HEADERS FROM 'file://$f1' AS row
           MERGE (n {gid: row.gid})
@@ -3427,7 +3442,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
   // the minimal store where a naive per-hop plan over-counts
   private lazy val cycleStore: GraphStore = {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-cycle").toString, spark, 2)
+      Memo.tempDir("graft-cycle"), spark, 2)
     new GraphDataset(st, spark, "cycle", "P").fullSync(Seq(
       Entity("urn:a").withProp("urn:x#name", "a")
         .withRef("urn:x#knows", "urn:b"),
@@ -3584,7 +3599,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
 
   test("edge delete-then-create in one statement resurrects visibility") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-eres").toString, spark, 2)
+      Memo.tempDir("graft-eres"), spark, 2)
     new GraphDataset(st, spark, "people", "P").fullSync(Seq(
       Entity("urn:a").withRef("urn:x#knows", "urn:b"),
       Entity("urn:b")))
@@ -3701,7 +3716,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
 
   test("valueType() reports list types for list-valued properties") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-vtl").toString, spark, 2)
+      Memo.tempDir("graft-vtl"), spark, 2)
     val sess = CypherEngine.session(st)
     sess.run(
       "CREATE (n:T {gid: 'urn:v1'}) SET n.nums = [1, 2], n.tags = ['a']",
@@ -3906,7 +3921,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
     // undirected MERGE stays allowed (Neo4j: matches either
     // direction, creates left-to-right)
     val st = new GraphStore(
-      Files.createTempDirectory("graft-umerge").toString, spark, 2)
+      Memo.tempDir("graft-umerge"), spark, 2)
     CypherEngine.query(st,
       """MERGE (a:M {gid: 'm:1'})-[r:t]-(b:M {gid: 'm:2'})
          RETURN type(r) AS t""").collect()
@@ -3966,7 +3981,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
   test("min/max on dynamic props use orderability: numbers by value " +
       "before strings, not canonical strings (probe fix)") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-minmax").toString, spark, 2)
+      Memo.tempDir("graft-minmax"), spark, 2)
     val xs = new GraphDataset(st, spark, "xs", "X")
     xs.fullSync(Seq(
       Entity("urn:a").withProp("urn:p#v", 9),
@@ -3987,7 +4002,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
   test("write CALL subqueries run per input row and splice into the " +
       "statement's single commit (probe 16, Neo4j 5)") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-wcall").toString, spark, 2)
+      Memo.tempDir("graft-wcall"), spark, 2)
     CypherEngine.query(st,
       "CREATE (:P {gid: 'p:1'}), (:P {gid: 'p:2'})").collect()
     val r = CypherEngine.query(st,
@@ -4009,7 +4024,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
 
   test("FOREACH bodies nest (probe 16)") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-nestfe").toString, spark, 2)
+      Memo.tempDir("graft-nestfe"), spark, 2)
     CypherEngine.query(st,
       """FOREACH (i IN [1, 2] |
            FOREACH (j IN [1, 2] |
@@ -4044,7 +4059,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
 
   test("typed list-element subscript dispatches on the PV.at tag") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-subsc").toString, spark, 2)
+      Memo.tempDir("graft-subsc"), spark, 2)
     CypherEngine.query(st,
       """CREATE (:T {gid: 't:1', nums: [1, 2], fs: [1.5, 2.5],
            bs: [true, false], ss: ['a', 'b']})""").collect()
@@ -4072,7 +4087,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
 
   test("dynamic labels/types: $(expr) in CREATE, MATCH, SET, rel types") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-dynlbl").toString, spark, 2)
+      Memo.tempDir("graft-dynlbl"), spark, 2)
     // constant (parameter) label
     CypherEngine.query(st, "CREATE (n:$($l) {gid: 'd:1'})",
       Map("l" -> "Alpha")).collect()
@@ -4137,7 +4152,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
   test("shortestPath under cross-clause uniqueness picks the shortest " +
       "VALID path (Neo4j exhaustive fallback)") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-spuniq").toString, spark, 2)
+      Memo.tempDir("graft-spuniq"), spark, 2)
     // diamond: a->b1->c and a->b2->c (both length 2); edge-key order
     // makes the a->b1 path the deterministic first choice
     val sess = CypherEngine.session(st)
@@ -4159,7 +4174,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
     // second graph: the ONLY 2-hop path conflicts, but a 3-hop
     // conflict-free path exists -> Neo4j returns length 3, not zero rows
     val st2 = new GraphStore(
-      Files.createTempDirectory("graft-spuniq2").toString, spark, 2)
+      Memo.tempDir("graft-spuniq2"), spark, 2)
     val s2 = CypherEngine.session(st2)
     Seq("a", "b1", "b2", "d", "c").foreach(g =>
       s2.run(s"CREATE (:V {gid: '$g'})").collect())
@@ -4203,7 +4218,7 @@ MATCH (n:$label {source: "$source"}) DETACH DELETE n
 
   test("column-built heterogeneous lists lower to VARIANT too") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-varcol").toString, spark, 2)
+      Memo.tempDir("graft-varcol"), spark, 2)
     CypherEngine.query(st,
       "CREATE (:T {gid: 't:1', name: 'ada', age: 7})").collect()
     // scalar beside map beside nested list, all built from COLUMNS —

@@ -21,7 +21,7 @@ class GraphMergeSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshStore(): GraphStore =
-    new GraphStore(Files.createTempDirectory("graft-store").toString, spark,
+    new GraphStore(Memo.tempDir("graft-store"), spark,
       numBuckets = 2)
 
   /** makeEntity (/root/reference/layer_test.go:437-443) */
@@ -339,7 +339,7 @@ class GraphMergeSpec extends AnyFunSuite {
 
   test("maintain(): bucket watermark rebuckets, fragmentation compacts, vacuum reclaims") {
     val store = new GraphStore(
-      Files.createTempDirectory("graft-maint").toString, spark,
+      Memo.tempDir("graft-maint"), spark,
       numBuckets = 2)
     val ds = new GraphDataset(store, spark, "people", "Person")
     // an incremental chain: growing data + per-key file fragmentation
@@ -385,7 +385,7 @@ class GraphMergeSpec extends AnyFunSuite {
 
   test("reverse-edge index stays consistent across every write path") {
     val store = new GraphStore(
-      Files.createTempDirectory("graft-redges").toString, spark,
+      Memo.tempDir("graft-redges"), spark,
       numBuckets = 4)
     val ds = new GraphDataset(store, spark, "people", "Person")
     // initial load: a hub with many incoming edges + spread-out dsts
@@ -415,7 +415,7 @@ class GraphMergeSpec extends AnyFunSuite {
 
   test("incoming-edge probes read only the probed dst bucket's files") {
     val store = new GraphStore(
-      Files.createTempDirectory("graft-redges-prune").toString, spark,
+      Memo.tempDir("graft-redges-prune"), spark,
       numBuckets = 4)
     val ds = new GraphDataset(store, spark, "people", "Person")
     ds.fullSync((1 to 16).map(i =>

@@ -97,6 +97,9 @@ class PlanShapeSpec extends AnyFunSuite {
         } catch { case e: Throwable =>
           failures += s"$name: execute failed: ${e.getMessage}" }
       }
+      // as Bench and Verify do: drop the entry's cached frames and
+      // private stores once its result is consumed
+      Scratch.release()
     }
     assert(failures.isEmpty,
       s"${failures.size} offenders:\n${failures.mkString("\n")}")
@@ -120,7 +123,7 @@ class PlanShapeSpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     try {
       val store = new graft.store.GraphStore(
-        java.nio.file.Files.createTempDirectory("graft-planshape").toString,
+        Memo.tempDir("graft-planshape"),
         spark, 2)
       graft.cypher.CypherEngine.query(store,
         """UNWIND range(1, 57) AS i

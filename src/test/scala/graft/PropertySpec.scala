@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Arbitrary, Gen}
 import org.scalatest.funsuite.AnyFunSuite
@@ -65,13 +63,17 @@ class PropertySpec extends AnyFunSuite {
       val bounds = Seq.fill(rnd.nextInt(15) + 1)(randKey())
         .distinct.sortWith(cmp(_, _) < 0)
       val vals = Seq.fill(200)(randKey())
-      for (v <- vals; lo <- vals if cmp(lo, v) <= 0;
-           hi <- vals if cmp(v, hi) <= 0) {
-        val (bl, bv, bh) = (SearchIndexes.rangeBucketOf(bounds, lo),
-          SearchIndexes.rangeBucketOf(bounds, v),
-          SearchIndexes.rangeBucketOf(bounds, hi))
-        assert(bl <= bv && bv <= bh,
-          s"bucket not monotone: $lo→$bl, $v→$bv, $hi→$bh")
+      // encode and bucket each value once per round, not per triple;
+      // the failure message is built only on failure (an assert clue
+      // is evaluated on every call, ~10^8 of them here)
+      val keys = vals.map(UTF8String.fromString).toArray
+      val bkt = vals.map(SearchIndexes.rangeBucketOf(bounds, _)).toArray
+      val ix = vals.indices
+      for (v <- ix; lo <- ix if keys(lo).compareTo(keys(v)) <= 0;
+           hi <- ix if keys(v).compareTo(keys(hi)) <= 0) {
+        val (bl, bv, bh) = (bkt(lo), bkt(v), bkt(hi))
+        if (!(bl <= bv && bv <= bh)) fail(s"bucket not monotone: " +
+          s"${vals(lo)}→$bl, ${vals(v)}→$bv, ${vals(hi)}→$bh")
       }
     }
 
@@ -236,7 +238,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   private def freshStore(): GraphStore =
-    new GraphStore(Files.createTempDirectory("graft-prop").toString, spark, 2)
+    new GraphStore(Memo.tempDir("graft-prop"), spark, 2)
 
   private def graphState(s: GraphStore): (Set[String], Set[(String, String, String)]) = {
     val ns = s.nodes.select("gid", "label", "source").collect()
@@ -261,7 +263,7 @@ class PropertySpec extends AnyFunSuite {
     assert(store.nodes.filter($"label" === "Nation").count() == 25)
     assert(store.edges.filter($"relType" === "in_region").count() == 25)
     // export: read the slice back as EGDM NDJSON and re-parse
-    val out = Files.createTempDirectory("graft-egdm-out").toString + "/x"
+    val out = Memo.tempDir("graft-egdm-out") + "/x"
     graft.model.EgdmCodec.write(entities, out)
     val back = graft.model.EgdmCodec.read(spark, out)
     assert(back.count() == 25)

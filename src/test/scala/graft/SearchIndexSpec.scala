@@ -28,7 +28,33 @@ class SearchIndexSpec extends AnyFunSuite {
 
   private def newStore(tag: String): GraphStore =
     new GraphStore(
-      Files.createTempDirectory(s"graft-sidx-$tag").toString, spark, 4)
+      Memo.tempDir(s"graft-sidx-$tag"), spark, 4)
+
+  /** the sections (`sect=x`) of an index table's current manifest */
+  private def sections(st: GraphStore, d: IndexDef): Set[String] =
+    st.manifestFiles(d.tableName).keySet.map(_.takeWhile(_ != '/'))
+
+  /** rewrite the current manifest without the given sections of
+    * `d`'s table — the shape of a table written by older code */
+  private def stripSections(st: GraphStore, d: IndexDef,
+      sects: String*): Unit = {
+    val v = st.currentVersion
+    val mPath = java.nio.file.Paths.get(st.root, f"m$v%08d.json")
+    val raw = new String(java.nio.file.Files.readAllBytes(mPath))
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val pruned = JsonMethods.parse(raw) match {
+      case JObject(tables) => JObject(tables.map {
+        case (t, JObject(parts)) if t == d.tableName =>
+          t -> JObject(parts.filterNot(p =>
+            sects.exists(x => p._1.startsWith(s"sect=$x"))))
+        case other => other
+      })
+      case other => other
+    }
+    java.nio.file.Files.write(mPath,
+      JsonMethods.compact(JsonMethods.render(pruned)).getBytes)
+  }
 
   test("vector index: DDL, probe query, incremental maintenance") {
     val st = newStore("vec")
@@ -89,7 +115,7 @@ class SearchIndexSpec extends AnyFunSuite {
   }
 
   test("vector index: reopen queries without retraining") {
-    val root = Files.createTempDirectory("graft-sidx-reopen").toString
+    val root = Memo.tempDir("graft-sidx-reopen")
     val st = new GraphStore(root, spark, 4)
     val sess = CypherEngine.session(st)
     (1 to 30).foreach(i => sess.run(
@@ -705,7 +731,7 @@ class SearchIndexSpec extends AnyFunSuite {
   test("index-ordered walk: ORDER BY … LIMIT and min/max off sect=r") {
     // 16 buckets so gid-bucket pruning is visible for ~5 candidates
     val st = new GraphStore(
-      Files.createTempDirectory("graft-sidx-pxw").toString, spark, 16)
+      Memo.tempDir("graft-sidx-pxw"), spark, 16)
     st.localizeTinyTables = false
     val sess = CypherEngine.session(st)
     (1 to 300).foreach { i =>
@@ -823,7 +849,7 @@ class SearchIndexSpec extends AnyFunSuite {
 
   test("composite-key ordered walk: equality prefix + ORDER BY trailing") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-sidx-cpxw").toString, spark, 16)
+      Memo.tempDir("graft-sidx-cpxw"), spark, 16)
     st.localizeTinyTables = false
     val sess = CypherEngine.session(st)
     (1 to 300).foreach { i =>
@@ -912,7 +938,7 @@ class SearchIndexSpec extends AnyFunSuite {
 
   test("CONTAINS / ENDS WITH route through the sect=w value dictionary") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-sidx-pxs").toString, spark, 16)
+      Memo.tempDir("graft-sidx-pxs"), spark, 16)
     st.localizeTinyTables = false
     val sess = CypherEngine.session(st)
     (1 to 200).foreach { i =>
@@ -1009,23 +1035,8 @@ class SearchIndexSpec extends AnyFunSuite {
     val d = st.indexDef("lage").get
     assert(st.pxRangeReady(d))
     // simulate a table built BEFORE the range section existed: strip
-    // the sect=r entries from the current manifest
-    val v = st.currentVersion
-    val mPath = java.nio.file.Paths.get(st.root, f"m$v%08d.json")
-    val raw = new String(java.nio.file.Files.readAllBytes(mPath))
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val pruned = JsonMethods.parse(raw) match {
-      case JObject(tables) => JObject(tables.map {
-        case (t, JObject(parts)) if t == d.tableName =>
-          t -> JObject(parts.filterNot(p =>
-            p._1.startsWith("sect=r") || p._1.startsWith("sect=w")))
-        case other => other
-      })
-      case other => other
-    }
-    java.nio.file.Files.write(mPath,
-      JsonMethods.compact(JsonMethods.render(pruned)).getBytes)
+    // the sect=r and sect=w entries from the current manifest
+    stripSections(st, d, "r", "w")
     assert(!st.pxRangeReady(st.indexDef("lage").get),
       "legacy simulation failed")
     assert(!st.pxValueDictReady(st.indexDef("lage").get))
@@ -1056,7 +1067,7 @@ class SearchIndexSpec extends AnyFunSuite {
 
   test("composite index: equality-prefix + trailing-range span route") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-sidx-pxcr").toString, spark, 16)
+      Memo.tempDir("graft-sidx-pxcr"), spark, 16)
     st.localizeTinyTables = false
     val sess = CypherEngine.session(st)
     (1 to 400).foreach { i =>
@@ -1303,7 +1314,7 @@ class SearchIndexSpec extends AnyFunSuite {
 
   test("point predicates route through the range index (bbox, distance)") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-sidx-pt").toString, spark, 16)
+      Memo.tempDir("graft-sidx-pt"), spark, 16)
     st.localizeTinyTables = false
     val sess = CypherEngine.session(st)
     (1 to 300).foreach { i =>
@@ -1388,7 +1399,7 @@ class SearchIndexSpec extends AnyFunSuite {
     CypherEngine.query(st,
       "CREATE FULLTEXT INDEX pidx FOR (x:Doc) ON EACH [x.body]").collect()
     val d = st.indexDef("pidx").get
-    assert(st.ftPositionsReady(d))
+    assert(sections(st, d)("sect=f"))
     // every token row carries sorted positions, tf == |pos|
     val toks = st.readSearchIndex(d, _.startsWith("sect=t"))
       .filter("sect = 't'")
@@ -1409,27 +1420,64 @@ class SearchIndexSpec extends AnyFunSuite {
     CypherEngine.query(st,
       "CREATE (:Doc {gid: 'd:5', body: 'outer merge join'})").collect()
     assert(hits("pidx", "\"merge join\"") == Seq("d:1", "d:5"))
-    assert(st.ftPositionsReady(st.indexDef("pidx").get))
+    assert(sections(st, d)("sect=f"))
 
-    // legacy simulation: a table built WITHOUT positions keeps the
-    // stored-text phrase fallback; slop demands a rebuild
-    graft.store.SearchIndexes.positionsEnabled = false
-    try {
-      CypherEngine.query(st,
-        "CREATE FULLTEXT INDEX lidx FOR (x:Doc) ON EACH [x.body]")
-        .collect()
-      assert(!st.ftPositionsReady(st.indexDef("lidx").get))
-      assert(hits("lidx", "\"merge join\"") == Seq("d:1", "d:5"))
-      val e = intercept[Exception] {
-        hits("lidx", "\"merge join\"~2")
-      }
-      assert(e.getMessage.contains("positional"))
-    } finally graft.store.SearchIndexes.positionsEnabled = true
-    // a full rebuild under position-aware code upgrades the table
-    st.compact()
-    assert(st.ftPositionsReady(st.indexDef("lidx").get))
-    assert(hits("lidx", "\"merge join\"~2") ==
+    // a table without the shape marker (older code) is never routed
+    // to: queries answer from the unindexed path, and the next commit
+    // rebuilds the table in full
+    stripSections(st, d, "f")
+    assert(!st.searchIndexReady(d), "marker-less table was routed to")
+    assert(hits("pidx", "\"merge join\"") == Seq("d:1", "d:5"))
+    assert(hits("pidx", "\"merge join\"~2") ==
       Seq("d:1", "d:2", "d:3", "d:5"))
+    CypherEngine.query(st,
+      "CREATE (:Doc {gid: 'd:6', body: 'join merge later'})").collect()
+    assert(sections(st, d)("sect=f"))
+    assert(st.searchIndexReady(d))
+    assert(hits("pidx", "\"merge join\"~2") ==
+      Seq("d:1", "d:2", "d:3", "d:5", "d:6"))
+  }
+
+  test("fulltext DDL on an empty store: later docs get the full shape") {
+    val docs = Seq(
+      ("d:1", "spark internals", "merge join beats hash join"),
+      ("d:2", "sprak tuning", "join merge order"),
+      ("d:3", "sprk joins", "merge the outer join later"),
+      ("d:4", "nothing relevant", "merge sort and then a hash join sprak"))
+    def createDocs(st: GraphStore): Unit = docs.foreach {
+      case (g, ti, bo) => CypherEngine.query(st,
+        s"CREATE (:Doc {gid: '$g', title: '$ti', body: '$bo'})").collect()
+    }
+    val ddl =
+      "CREATE FULLTEXT INDEX ft FOR (x:Doc) ON EACH [x.title, x.body]"
+    // declared before any node exists, then one commit per doc
+    val early = newStore("ftearly")
+    CypherEngine.query(early, ddl).collect()
+    createDocs(early)
+    // declared over the same docs
+    val late = newStore("ftlate")
+    createDocs(late)
+    CypherEngine.query(late, ddl).collect()
+    def hits(st: GraphStore, q: String): Seq[(String, Double)] =
+      CypherEngine.query(st,
+        s"""CALL db.index.fulltext.queryNodes('ft', '$q')
+           |YIELD node, score RETURN node.gid AS g, score""".stripMargin)
+        .collect().map(r => (r.getString(0), r.getDouble(1)))
+        .sortBy(_._1).toSeq
+    Seq("\"merge join\"~2" -> Seq("d:1", "d:2", "d:3"),
+        "title:sprak~1" -> Seq("d:2", "d:3")).foreach { case (q, want) =>
+      val (e, l) = (hits(early, q), hits(late, q))
+      assert(e.map(_._1) == want, q)
+      assert(l.map(_._1) == want, q)
+      e.zip(l).foreach { case ((_, a), (_, b)) =>
+        assert(math.abs(a - b) < 1e-9, s"$q: $a vs $b") }
+    }
+    Seq(early, late).foreach { st =>
+      val d = st.indexDef("ft").get
+      assert(Set("sect=t", "sect=s", "sect=d", "sect=f")
+        .subsetOf(sections(st, d)), sections(st, d))
+      assert(st.searchIndexReady(d))
+    }
   }
 
   test("DISTINCT values served from the px value dictionary") {
@@ -2217,7 +2265,7 @@ class SearchIndexSpec extends AnyFunSuite {
       """CREATE FULLTEXT INDEX fbf FOR (x:Doc)
         |ON EACH [x.title, x.body]""".stripMargin).collect()
     val d = st.indexDef("fbf").get
-    assert(st.ftFieldsReady(d), "sect=f marker missing after build")
+    assert(sections(st, d)("sect=f"), "sect=f marker missing after build")
 
     // per-field collection statistics rows (fld is column index 6)
     val byFld = st.readSearchIndex(d, _.startsWith("sect=s"))
@@ -2322,7 +2370,8 @@ class SearchIndexSpec extends AnyFunSuite {
     CypherEngine.query(st,
       "CREATE FULLTEXT INDEX fd FOR (x:Doc) ON EACH [x.body]").collect()
     val d = st.indexDef("fd").get
-    assert(st.ftDictReady(d), "dictionary section missing after build")
+    assert(sections(st, d)("sect=d"),
+      "dictionary section missing after build")
     // one dict row per distinct term, tf = document frequency
     val dict = st.readSearchIndex(d, _.startsWith("sect=d"))
     assert(dict.count() == 80)
@@ -2409,7 +2458,7 @@ class SearchIndexSpec extends AnyFunSuite {
 
   test("Z-order point index: true 2-D pruning for bbox and distance") {
     val st = new GraphStore(
-      Files.createTempDirectory("graft-sidx-zpt").toString, spark, 16)
+      Memo.tempDir("graft-sidx-zpt"), spark, 16)
     st.localizeTinyTables = false
     val sess = CypherEngine.session(st)
     // a 20×20 grid: x = i mod 20, y = i div 20

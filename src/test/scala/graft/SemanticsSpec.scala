@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +15,7 @@ class SemanticsSpec extends AnyFunSuite {
 
   lazy val spark = SparkTestSession.get
   private lazy val st = new GraphStore(
-    Files.createTempDirectory("graft-sem").toString, spark, 2)
+    Memo.tempDir("graft-sem"), spark, 2)
   private def one(q: String) = CypherEngine.query(st, q).collect().head
 
   test("numeric type preservation matches Neo4j") {
@@ -85,7 +84,7 @@ class SemanticsSpec extends AnyFunSuite {
     // on a NUMERIC property (no "9000.0"-rendering match) whether it
     // sits in WHERE or inside an aggregate's argument
     val stx = new GraphStore(
-      Files.createTempDirectory("graft-sem-agg").toString, spark, 2)
+      Memo.tempDir("graft-sem-agg"), spark, 2)
     val sess = CypherEngine.session(stx)
     sess.run("CREATE (:V {gid: 'v:1', p: 9000.0})").collect()
     sess.run("CREATE (:V {gid: 'v:2', p: '9k-string'})").collect()

@@ -34,7 +34,7 @@ class ServiceSpec extends AnyFunSuite {
     val cfg = LayerConfig.fromJson(configJson)
       .fold(m => fail(s"config: $m"), identity)
     val svc = new GraftService(spark, cfg,
-      Files.createTempDirectory("graft-svc").toString)
+      Memo.tempDir("graft-svc"))
     svc.start()
     svc
   }
@@ -277,12 +277,12 @@ class ServiceSpec extends AnyFunSuite {
   }
 
   test("config hot-reload: a new dataset appears without restart") {
-    val file = Files.createTempFile("graft-cfg", ".json")
+    val file = java.nio.file.Paths.get(Memo.tempDir("graft-cfg"), "config.json")
     Files.write(file, configJson.getBytes("UTF-8"))
     val cfg = LayerConfig.fromJson(configJson)
       .fold(m => fail(s"config: $m"), identity)
     val svc = new GraftService(spark, cfg,
-      Files.createTempDirectory("graft-svc-reload").toString,
+      Memo.tempDir("graft-svc-reload"),
       configFile = Some(file))
     val p = svc.start()
     try {
@@ -308,7 +308,7 @@ class ServiceSpec extends AnyFunSuite {
     val cfg = LayerConfig.fromJson(configJson)
       .fold(m => fail(s"config: $m"), identity)
     val svc = new GraftService(spark, cfg,
-      Files.createTempDirectory("graft-svc-cap").toString,
+      Memo.tempDir("graft-svc-cap"),
       queryRowCap = 2)
     val p = svc.start()
     try {
@@ -338,7 +338,7 @@ class ServiceSpec extends AnyFunSuite {
     val cfg = LayerConfig.fromJson(configJson)
       .fold(m => fail(s"config: $m"), identity)
     val small = new GraftService(spark, cfg,
-      Files.createTempDirectory("graft-svc-cap").toString,
+      Memo.tempDir("graft-svc-cap"),
       queryRowCap = 3)
     small.start()
     try {
@@ -377,7 +377,7 @@ class ServiceSpec extends AnyFunSuite {
     def committed(body: String): (Set[Row], Set[Row]) = {
       val cfg = LayerConfig.fromJson(configJson)
         .fold(m => fail(s"config: $m"), identity)
-      val dir = Files.createTempDirectory("graft-svc-body").toString
+      val dir = Memo.tempDir("graft-svc-body")
       val svc = new GraftService(spark, cfg, dir)
       svc.start()
       try {

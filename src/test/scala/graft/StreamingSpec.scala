@@ -31,7 +31,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // stage the same parquet as a streamed source (file sources
     // stream from directories)
-    val stage = Files.createTempDirectory("graft-events-src")
+    val stage = java.nio.file.Paths.get(Memo.tempDir("graft-events-src"))
     Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
       stage.resolve("events.parquet"))
     val streamed = spark.readStream
@@ -62,9 +62,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming EGDM ingest merges per micro-batch (foreachBatch)") {
-    val in = Files.createTempDirectory("graft-stream-in")
+    val in = java.nio.file.Paths.get(Memo.tempDir("graft-stream-in"))
     val store = new GraphStore(
-      Files.createTempDirectory("graft-stream-store").toString, spark, 2)
+      Memo.tempDir("graft-stream-store"), spark, 2)
     val e1 = graft.model.Entity("urn:s1")
       .withProp("urn:p#name", "one")
       .withRef("urn:r#next", "urn:s2")
@@ -87,7 +87,7 @@ class StreamingSpec extends AnyFunSuite {
       "feed across commits incl. truncate and delete") {
     import graft.model.Entity
     val store = new GraphStore(
-      Files.createTempDirectory("graft-cf-src").toString, spark, 2)
+      Memo.tempDir("graft-cf-src"), spark, 2)
     def put(ents: Seq[Entity], truncate: Boolean = false): Unit =
       graft.ops.GraphMerge.applyBatch(store, "ds", "Thing", ents.toDS(),
         truncateFirst = truncate)
@@ -136,9 +136,9 @@ class StreamingSpec extends AnyFunSuite {
   test("entitySync round-trip: change stream replicates a store") {
     import graft.model.{Entity, PV}
     val src = new GraphStore(
-      Files.createTempDirectory("graft-cf-rt-src").toString, spark, 2)
+      Memo.tempDir("graft-cf-rt-src"), spark, 2)
     val dst = new GraphStore(
-      Files.createTempDirectory("graft-cf-rt-dst").toString, spark, 2)
+      Memo.tempDir("graft-cf-rt-dst"), spark, 2)
     val q = spark.readStream.format("graft-changes")
       .option("store", src.root).load()
       .writeStream.outputMode("append")
@@ -432,7 +432,7 @@ class StreamingSpec extends AnyFunSuite {
     // one store with mixed-typed scalar props; the batch extraction
     // is the oracle for the streamed rows (shared encode definition)
     val st = new GraphStore(
-      Files.createTempDirectory("graft-pxstream").toString, spark, 2)
+      Memo.tempDir("graft-pxstream"), spark, 2)
     val sess = graft.cypher.CypherEngine.session(st)
     val fixtures: Seq[(String, Any)] = Seq(
       "p:1" -> "alpha", "p:2" -> 42L, "p:3" -> 4.25, "p:4" -> true,

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,7 +19,7 @@ class SupernodeSpec extends AnyFunSuite {
 
   private lazy val st: GraphStore = {
     val s = new GraphStore(
-      Files.createTempDirectory("graft-super").toString, spark, 8)
+      Memo.tempDir("graft-super"), spark, 8)
     s.localizeTinyTables = false // keep the at-scale distributed plan
     val propsT = GraphStore.nodeSchema("props").dataType
     val xlT = GraphStore.nodeSchema("xlabels").dataType

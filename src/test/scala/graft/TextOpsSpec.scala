@@ -130,7 +130,7 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("t_cdc_dedup survives one-word documents") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cdc").toString
+    val tmp = Memo.tempDir("graft-cdc")
     val body = (1 to 40).map(i => s"w$i").mkString(" ")
     // doc 1 has ONE word: sequence(1, 0) steps downward and an
     // unguarded boundary HOF would evaluate element_at(w, 0) and throw

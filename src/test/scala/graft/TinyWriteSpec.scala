@@ -47,10 +47,8 @@ class TinyWriteSpec extends AnyFunSuite {
 
   test("tiny write == distributed dynamic-partition write: layout, " +
       "contents, order") {
-    val tinyDir = java.nio.file.Files
-      .createTempDirectory("graft-tinyw").toString
-    val jobDir = java.nio.file.Files
-      .createTempDirectory("graft-jobw").toString
+    val tinyDir = Memo.tempDir("graft-tinyw")
+    val jobDir = Memo.tempDir("graft-jobw")
     org.apache.spark.sql.graft.TinyParquet.writeLocal(
       frame, tinyDir, 9L, "label", "gid")
     frame.coalesce(1).sortWithinPartitions("gid")
@@ -91,8 +89,7 @@ class TinyWriteSpec extends AnyFunSuite {
 
   test("tiny-written files carry live column statistics (footer " +
       "min/max for the dirty-bucket probes)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-tinystat").toString
+    val dir = Memo.tempDir("graft-tinystat")
     org.apache.spark.sql.graft.TinyParquet.writeLocal(
       frame, dir, 9L, "label", "gid")
     val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
